@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
 import java.util.concurrent.atomic.AtomicLong
 
@@ -381,8 +380,8 @@ object Bench {
     // 32 × factor to measure the cluster-realistic configuration
     // (BASELINE.md round 9) — same JVM, same 32 threads, more waves.
     val shufflePartitions = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+    // the engine's session (GraftSession) plus the bench's own overrides
+    val spark = GraftSession.builder(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", shufflePartitions)
       // static conf, must be set before the session exists: the default
       // 100-entry whole-stage-codegen cache thrashes across this suite's
@@ -396,16 +395,6 @@ object Bench {
       // source count with ~3× headroom; a long-running cluster serving
       // this workload would size the cache to the workload the same way.
       .config("spark.sql.codegen.cache.maxEntries", "8000")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.streaming.sessionWindow.merge.sessions.in.local.partition", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // storage-medium open-cost model — see GraftSession (round 16):
-      // without it the 4 MB default bin-packs multi-file artifact tables
-      // back into 1-2 scan splits on this host's tmpfs scratch
-      .config("spark.sql.files.openCostInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_OPEN_COST", "131072"))
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // The measured action is a noop-sink write, NOT count(): count() lets

@@ -135,12 +135,12 @@ object ReplayPipelineCli {
       try_to_timestamp(col("event_time"), lit("yyyy-MM-dd HH:mm:ss zzz"))
         .as("__pace_ts"),
       EcommerceOps.encodeMessage(cols.map(col).toIndexedSeq).as("value"))
-    // fail fast on rows the pacing key can't be derived from: a null
-    // __pace_ts would silently fall out of EVERY quantile slice filter in
-    // writePacedSlices (null comparisons), vanishing from the sink — and an
+    // fail fast on rows the pacing key can't be derived from: the paced
+    // writers refuse a null __pace_ts themselves, but only after writing
+    // the whole replay and without naming the input format — and an
     // all-null/empty input would NPE on the span aggregate below. The
     // reference's strptime loop dies on the first bad row; one clear error
-    // listing the count beats both failure shapes.
+    // listing the count, before anything is written, beats both.
     val Row(total: Long, parsed: Long, spanOrNull) = messages
       .select(count(lit(1)), count(col("__pace_ts")),
         (unix_timestamp(max(col("__pace_ts"))) -

@@ -90,11 +90,13 @@ object StreamRunner {
   }
 
   /** T4 — event-time-paced replay: split the table into `slices` time-ordered
-    * files and feed ONE slice per micro-batch (`maxFilesPerTrigger=1`), so a
-    * downstream query processes the stream incrementally in event-time order
-    * — the deterministic stand-in for the reference's wall-clock-paced
-    * publisher (simulate_session_stream.py:89-93); `speedFactor` maps to
-    * slice count / trigger rate, not to sleeps. */
+    * files ([[writePacedSlices]]: at most two reads of `df`, one write) and feed ONE
+    * slice per micro-batch (`maxFilesPerTrigger=1`), so a downstream query
+    * processes the stream incrementally in event-time order — exactly
+    * `slices` batches, empty slices included — the deterministic stand-in
+    * for the reference's wall-clock-paced publisher
+    * (simulate_session_stream.py:89-93); `speedFactor` maps to slice count /
+    * trigger rate, not to sleeps. A null `tsCol` fails the replay. */
   def replayPaced(spark: SparkSession, df: DataFrame, tsCol: String,
                   slices: Int, tag: String): DataFrame = {
     // cached like [[replay]] (same key discipline, + the slice shape): the
@@ -145,32 +147,46 @@ object StreamRunner {
     * a task UUID, so cross-commit collisions cannot occur. */
   private def commitSlice(df: DataFrame, dir: String,
                           stamper: SliceStamper): Unit = {
-    // stage INSIDE the target dir: a dot-prefixed subdir is invisible to
-    // the file source's listing (hidden-path filter), and staying on the
-    // target's own filesystem is what makes the renames below atomic —
-    // a /tmp staging dir would throw AtomicMoveNotSupported whenever the
-    // channel root lives on another mount
-    val staging = java.nio.file.Paths.get(
-      dir, s".staging_${java.util.UUID.randomUUID().toString.take(8)}")
+    val staging = stagingDir(dir)
     df.coalesce(1).write.mode("overwrite").parquet(staging.toString)
     val stamp = stamper.next()
-    val parts = Option(staging.toFile.listFiles())
-      .getOrElse(Array.empty)
+    for (f <- dataFiles(staging.toFile).sortBy(_.getName))
+      moveStamped(f, java.nio.file.Paths.get(dir, f.getName), stamp)
+    deleteTree(staging)
+  }
+
+  /** A fresh staging dir INSIDE `dir`: a dot-prefixed subdir is invisible
+    * to the file source's listing (hidden-path filter), and staying on the
+    * target's own filesystem is what makes the commit renames atomic — a
+    * /tmp staging dir would throw AtomicMoveNotSupported whenever the
+    * channel root lives on another mount. */
+  private def stagingDir(dir: String): java.nio.file.Path =
+    java.nio.file.Paths.get(
+      dir, s".staging_${java.util.UUID.randomUUID().toString.take(8)}")
+
+  /** The parquet data files directly under `d` (no `_SUCCESS`, no hidden
+    * checksum files); none when `d` does not exist. */
+  private def dataFiles(d: java.io.File): Array[java.io.File] =
+    Option(d.listFiles()).getOrElse(Array.empty)
       .filter(f => f.getName.endsWith(".parquet") &&
         !f.getName.startsWith("_") && !f.getName.startsWith("."))
-    for (f <- parts.sortBy(_.getName)) {
-      f.setLastModified(stamp)
-      java.nio.file.Files.move(
-        f.toPath, java.nio.file.Paths.get(dir, f.getName),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    }
-    // remove the leftovers (_SUCCESS etc.) and the staging dir itself —
-    // recursively and best-effort: an aborted/retried task can leave a
-    // non-empty `_temporary` subdir, which a flat delete() skips silently
-    // and a bare deleteIfExists(staging) then turns into a
-    // DirectoryNotEmptyException AFTER the part files are already
-    // committed. Cleanup failure past the renames must not fail the
-    // publish; a survivor is scratch inside a TempDirs-tracked tree.
+
+  /** Stamp `f` with `stamp`, then rename it atomically to `to`. */
+  private def moveStamped(f: java.io.File, to: java.nio.file.Path,
+                          stamp: Long): Unit = {
+    f.setLastModified(stamp)
+    java.nio.file.Files.move(
+      f.toPath, to, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+  }
+
+  /** Remove a staging dir's leftovers (_SUCCESS etc.) and the dir itself —
+    * recursively and best-effort: an aborted/retried task can leave a
+    * non-empty `_temporary` subdir, which a flat delete() skips silently
+    * and a bare deleteIfExists(staging) then turns into a
+    * DirectoryNotEmptyException AFTER the part files are already
+    * committed. Cleanup failure past the renames must not fail the
+    * publish; a survivor is scratch inside a TempDirs-tracked tree. */
+  private def deleteTree(staging: java.nio.file.Path): Unit =
     try {
       val walk = java.nio.file.Files.walk(staging)
       try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
@@ -187,7 +203,6 @@ object StreamRunner {
       case _: InterruptedException => Thread.currentThread().interrupt()
       case scala.util.control.NonFatal(_) => ()
     }
-  }
 
   /** One ordered bulk commit into `dir`, stamped past everything already
     * there. A plain unstamped write carries wall-clock mtimes, and
@@ -198,27 +213,84 @@ object StreamRunner {
   def writeOrderedCommit(df: DataFrame, dir: String): Unit =
     commitSlice(df, dir, new SliceStamper(dir))
 
-  /** Write `df` into `dir` as `slices` event-time-ordered file commits
-    * (quantile-split on `tsCol`). Slices must be written in event-time order
-    * as separate commits: the file source replays files in
-    * modification-time order, and a single multi-part write commits parts
-    * in task-completion (arbitrary) order — which would turn earlier-range
-    * slices into droppable late data. Commit order is pinned by
-    * [[SliceStamper]], not the write clock. Shared by [[replayPaced]] and
-    * the channel publisher ([[Channels]]). */
+  /** Write `df` into `dir` as `slices` event-time-ordered file commits,
+    * quantile-split on `tsCol`: with `qs` the exact `slices`-quantiles of
+    * `tsCol`, slice j holds the rows with `qs(j-1) <= ts < qs(j)` (the
+    * first slice is open below, the last open above; tied boundaries leave
+    * a slice empty). Every slice is one commit of one file, empty slices
+    * included, so a reader at `maxFilesPerTrigger=1` sees exactly `slices`
+    * micro-batches; an empty frame gives `slices` empty commits.
+    *
+    * The source is read at most twice, whatever `slices` is: once for the
+    * quantiles (not needed for one slice) and once for ONE write that tags
+    * each row with its slice index and lays the slices out as partitions
+    * of a hidden staging dir.
+    * The slices are then committed one by one in event-time order — each
+    * file stamped by [[SliceStamper]] and renamed into `dir` under a
+    * per-publish unique, visible name — because the file source replays
+    * files in modification-time order, and a multi-part write's own files
+    * would carry task-completion (arbitrary) mtimes that turn earlier-range
+    * slices into droppable late data. Renaming matters twice: one task can
+    * write several slices under the same part-file name, and a name
+    * starting with "." or "_" would be hidden from the file source.
+    *
+    * A null `tsCol` has no slice, so such rows are refused rather than
+    * dropped: they are counted on the write itself (an [[Observation]], no
+    * extra scan), and the publish fails before any slice is committed,
+    * leaving `dir` as it was. Shared by [[replayPaced]] and the channel
+    * publisher ([[Channels]]). */
   def writePacedSlices(df: DataFrame, tsCol: String, slices: Int,
                        dir: String, dropCols: Seq[String] = Nil): Unit = {
-    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.{Observation, Row}
+    import org.apache.spark.sql.functions.{col, count, lit, when}
+    require(slices >= 1, s"paced replay needs at least one slice, got $slices")
+    val ts = col("__ts_d")
     val withD = df.withColumn("__ts_d", col(tsCol).cast("double"))
-    val qs = withD.stat.approxQuantile(
-      "__ts_d", (1 until slices).map(_.toDouble / slices).toArray, 0.0)
-    val stamper = new SliceStamper(dir)
-    for (j <- 0 until slices) {
-      var part = withD
-      if (j > 0) part = part.filter(col("__ts_d") >= qs(j - 1))
-      if (j < slices - 1) part = part.filter(col("__ts_d") < qs(j))
-      commitSlice(part.drop("__ts_d").drop(dropCols: _*), dir, stamper)
-    }
+    // no boundaries for one slice, nor for an empty (or all-null) frame
+    val qs =
+      if (slices == 1) Array.empty[Double]
+      else withD.stat.approxQuantile(
+        "__ts_d", (1 until slices).map(_.toDouble / slices).toArray, 0.0)
+    // slice index = the number of boundaries <= ts
+    val slice = qs.map(q => when(ts >= q, 1).otherwise(0)).foldLeft(lit(0))(_ + _)
+    val nulls = Observation("paced_null_ts")
+    val tagged = withD
+      .observe(nulls, count(when(ts.isNull, 1)).as("n"))
+      .withColumn("__slice", slice)
+      .drop("__ts_d").drop(dropCols: _*)
+    val staging = stagingDir(dir)
+    try {
+      tagged.repartition(slices, col("__slice"))
+        .write.partitionBy("__slice").parquet(staging.toString)
+      val nNull = nulls.get("n").asInstanceOf[Long]
+      require(nNull == 0, s"paced replay requires a non-null $tsCol on every " +
+        s"row; $nNull rows have none")
+      val files = (0 until slices).map { j =>
+        val fs = dataFiles(staging.resolve(s"__slice=$j").toFile)
+        require(fs.length <= 1, s"slice $j was written as ${fs.length} files")
+        fs.headOption
+      }
+      // an empty slice still commits (one micro-batch each): a copy of an
+      // empty file with the output schema, written only when needed
+      lazy val empty = {
+        val d = staging.resolve("_empty")
+        tagged.sparkSession.createDataFrame(
+          java.util.Collections.emptyList[Row](), tagged.drop("__slice").schema)
+          .write.parquet(d.toString)
+        dataFiles(d.toFile).head
+      }
+      val publish = java.util.UUID.randomUUID().toString.take(8)
+      val stamper = new SliceStamper(dir)
+      for ((f, j) <- files.zipWithIndex) {
+        val src = f.getOrElse {
+          val c = staging.resolve(s"_empty_$j.parquet")
+          java.nio.file.Files.copy(empty.toPath, c)
+          c.toFile
+        }
+        moveStamped(src, java.nio.file.Paths.get(dir, f"part-$j%05d-$publish.parquet"),
+          stamper.next())
+      }
+    } finally deleteTree(staging)
   }
 
   /** Per-event-Δt slicing (the reference's simulate_session_stream.py:63-108
