@@ -82,8 +82,8 @@ object BatchPipelineCli {
   *     `slices = ceil(span_hours / speedFactor)`.
   *   - `--perEvent true` (simulate_session_stream.py's per-event Δt loop) —
   *     one micro-batch per distinct event time, in event-time order; the
-  *     reference's inter-event sleep becomes commit order
-  *     ([[StreamRunner.writePerEventSlices]]).
+  *     reference's inter-event sleep becomes commit order (StreamRunner's
+  *     one staged slice commit, shared with `--speedFactor`).
   * Mutually exclusive, like the two reference scripts.
   */
 object ReplayPipelineCli {

@@ -18,7 +18,7 @@ import org.apache.spark.sql.types.{BinaryType, StructField, StructType}
   * Mapping, concept for concept:
   *   - **topic** → an append-only directory of message files. Publishing is
   *     a file commit; file modification-time order is publish order (the
-  *     same contract [[StreamRunner.writePacedSlices]] relies on).
+  *     contract StreamRunner's one staged slice commit keeps).
   *   - **subscription** → a named, topic-bound streaming checkpoint. Every
   *     subscription reads the whole topic independently (Pub/Sub fan-out)
   *     and its checkpoint carries its own delivery cursor: a drain delivers
@@ -47,7 +47,7 @@ import org.apache.spark.sql.types.{BinaryType, StructField, StructType}
   *
   * SINGLE WRITER PER TOPIC: publish order is serialized by the mtime
   * stamper, which derives its base from a snapshot of the dir listing at
-  * publish time ([[StreamRunner.writeOrderedCommit]]) — two publishers
+  * publish time (in StreamRunner's one slice commit) — two publishers
   * stamping the same topic concurrently can snapshot the same base and
   * emit colliding/interleaved mtimes, making cross-publisher replay order
   * arbitrary. Concurrent publishers must serialize externally (one

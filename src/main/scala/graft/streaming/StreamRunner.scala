@@ -2,8 +2,9 @@ package graft.streaming
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.state.StateStore
+import org.apache.spark.sql.functions.{col, lit, when}
 import org.apache.spark.sql.streaming.Trigger
 
 /** Test/driver harness for the streaming operators (SURVEY.md §2.9, §3.2-3.3):
@@ -67,20 +68,19 @@ object StreamRunner {
     }.mkString("||").hashCode
   }
 
+  /** Replay-cache key of `df`: its session, schema, canonical plan and
+    * [[sourceSig]]. Callers append their replay shape. */
+  private def frameKey(df: DataFrame): String =
+    s"${graft.SessionToken(df.sparkSession)}|${df.schema.catalogString}|" +
+      s"${df.queryExecution.logical.canonicalized.semanticHash()}|${sourceSig(df)}"
+
   /** Materialize a bounded frame and re-open it as a parquet file stream.
     * `singleFile=true` forces one input file so `AvailableNow` runs exactly
     * one micro-batch (required by operators whose emission the harness wants
     * to compare 1:1 with batch, e.g. flatMapGroupsWithState). */
   def replay(spark: SparkSession, df: DataFrame, tag: String,
              singleFile: Boolean = false): DataFrame = {
-    // pre-merge session windows map-side before the state-store shuffle
-    // (measured 4× on session-window aggregation; correctness unchanged)
-    spark.conf.set(
-      "spark.sql.streaming.sessionWindow.merge.sessions.in.local.partition", "true")
-    val key = s"${graft.SessionToken(spark)}|${df.schema.catalogString}|" +
-      s"${df.queryExecution.logical.canonicalized.semanticHash()}|" +
-      s"${sourceSig(df)}|$singleFile"
-    val dir = replayCache.computeIfAbsent(key, { _ =>
+    val dir = replayCache.computeIfAbsent(s"${frameKey(df)}|$singleFile", { _ =>
       val d = tempDir(s"replay_$tag")
       val w = if (singleFile) df.coalesce(1) else df
       w.write.mode("overwrite").parquet(d)
@@ -99,15 +99,12 @@ object StreamRunner {
     * trigger rate, not to sleeps. A null `tsCol` fails the replay. */
   def replayPaced(spark: SparkSession, df: DataFrame, tsCol: String,
                   slices: Int, tag: String): DataFrame = {
-    // cached like [[replay]] (same key discipline, + the slice shape): the
-    // bench harness replays each paced query three times, and re-slicing
-    // an identical bounded frame per pass is pure write waste — the slice
-    // files' strictly-increasing mtimes (SliceStamper) replay in the same
-    // order from a reused dir
-    val key = s"${graft.SessionToken(spark)}|paced|${df.schema.catalogString}|" +
-      s"${df.queryExecution.logical.canonicalized.semanticHash()}|" +
-      s"${sourceSig(df)}|$tsCol|$slices"
-    val dir = replayCache.computeIfAbsent(key, { _ =>
+    // cached like [[replay]] (+ the slice shape): the bench harness replays
+    // each paced query three times, and re-slicing an identical bounded
+    // frame per pass is pure write waste — the slice files'
+    // strictly-increasing mtimes (SliceStamper) replay in the same order
+    // from a reused dir
+    val dir = replayCache.computeIfAbsent(s"paced|${frameKey(df)}|$tsCol|$slices", { _ =>
       val d = tempDir(s"paced_$tag")
       writePacedSlices(df, tsCol, slices, d)
       d
@@ -134,25 +131,6 @@ object StreamRunner {
     }
     private var step = 0
     def next(): Long = { val t = t0 + step * 2000L; step += 1; t }
-  }
-
-  /** One slice commit into `dir` with its mtime stamped BEFORE the file
-    * becomes visible there: parquet to a scratch dir, stamp the data file,
-    * then rename it in (same filesystem — rename preserves the stamp). The
-    * earlier write-then-restamp sequence had a window in which a
-    * concurrently listing consumer (Channels doc: "publishers/consumers
-    * are separate jobs") could observe and checkpoint the wall-clock
-    * mtime — which, sorting between earlier future-stamped slices, is the
-    * exact misordering the stamp exists to prevent. Part-file names carry
-    * a task UUID, so cross-commit collisions cannot occur. */
-  private def commitSlice(df: DataFrame, dir: String,
-                          stamper: SliceStamper): Unit = {
-    val staging = stagingDir(dir)
-    df.coalesce(1).write.mode("overwrite").parquet(staging.toString)
-    val stamp = stamper.next()
-    for (f <- dataFiles(staging.toFile).sortBy(_.getName))
-      moveStamped(f, java.nio.file.Paths.get(dir, f.getName), stamp)
-    deleteTree(staging)
   }
 
   /** A fresh staging dir INSIDE `dir`: a dot-prefixed subdir is invisible
@@ -204,67 +182,42 @@ object StreamRunner {
       case scala.util.control.NonFatal(_) => ()
     }
 
-  /** One ordered bulk commit into `dir`, stamped past everything already
-    * there. A plain unstamped write carries wall-clock mtimes, and
-    * [[SliceStamper]] deliberately stamps AHEAD of the wall clock (2 s per
-    * slice) — so a bulk publish following a paced publish could land its
-    * files BETWEEN earlier slices in mtime order, turning earlier-range
-    * data into droppable late data. Used by [[Channels.publish]]. */
-  def writeOrderedCommit(df: DataFrame, dir: String): Unit =
-    commitSlice(df, dir, new SliceStamper(dir))
-
-  /** Write `df` into `dir` as `slices` event-time-ordered file commits,
-    * quantile-split on `tsCol`: with `qs` the exact `slices`-quantiles of
-    * `tsCol`, slice j holds the rows with `qs(j-1) <= ts < qs(j)` (the
-    * first slice is open below, the last open above; tied boundaries leave
-    * a slice empty). Every slice is one commit of one file, empty slices
-    * included, so a reader at `maxFilesPerTrigger=1` sees exactly `slices`
-    * micro-batches; an empty frame gives `slices` empty commits.
+  /** The one slice commit every publisher here goes through: `tagged`
+    * carries each row's slice index in `__slice` (0 until `slices`), and
+    * `dir` receives exactly `slices` file commits, one per slice in slice
+    * order, empty slices included — so a reader at `maxFilesPerTrigger=1`
+    * sees exactly `slices` micro-batches.
     *
-    * The source is read at most twice, whatever `slices` is: once for the
-    * quantiles (not needed for one slice) and once for ONE write that tags
-    * each row with its slice index and lays the slices out as partitions
-    * of a hidden staging dir.
-    * The slices are then committed one by one in event-time order — each
-    * file stamped by [[SliceStamper]] and renamed into `dir` under a
-    * per-publish unique, visible name — because the file source replays
-    * files in modification-time order, and a multi-part write's own files
-    * would carry task-completion (arbitrary) mtimes that turn earlier-range
-    * slices into droppable late data. Renaming matters twice: one task can
-    * write several slices under the same part-file name, and a name
-    * starting with "." or "_" would be hidden from the file source.
+    * `tagged` is written ONCE, its slices laid out as partitions of a
+    * hidden staging dir (one task, so one file, per slice). The slices are
+    * then committed one by one, each file stamped by [[SliceStamper]]
+    * BEFORE it becomes visible and renamed into `dir` under a per-publish
+    * unique, visible name. The file source replays files in
+    * modification-time order: a multi-part write's own files carry
+    * task-completion (arbitrary) mtimes, and a write-then-restamp sequence
+    * would let a concurrently listing consumer (Channels doc:
+    * "publishers/consumers are separate jobs") checkpoint a wall-clock
+    * mtime that sorts between earlier future-stamped slices. Renaming
+    * matters twice: one task can write several slices under the same
+    * part-file name, and a name starting with "." or "_" would be hidden
+    * from the file source.
     *
-    * A null `tsCol` has no slice, so such rows are refused rather than
-    * dropped: they are counted on the write itself (an [[Observation]], no
-    * extra scan), and the publish fails before any slice is committed,
-    * leaving `dir` as it was. Shared by [[replayPaced]] and the channel
-    * publisher ([[Channels]]). */
-  def writePacedSlices(df: DataFrame, tsCol: String, slices: Int,
-                       dir: String, dropCols: Seq[String] = Nil): Unit = {
-    import org.apache.spark.sql.{Observation, Row}
-    import org.apache.spark.sql.functions.{col, count, lit, when}
-    require(slices >= 1, s"paced replay needs at least one slice, got $slices")
-    val ts = col("__ts_d")
-    val withD = df.withColumn("__ts_d", col(tsCol).cast("double"))
-    // no boundaries for one slice, nor for an empty (or all-null) frame
-    val qs =
-      if (slices == 1) Array.empty[Double]
-      else withD.stat.approxQuantile(
-        "__ts_d", (1 until slices).map(_.toDouble / slices).toArray, 0.0)
-    // slice index = the number of boundaries <= ts
-    val slice = qs.map(q => when(ts >= q, 1).otherwise(0)).foldLeft(lit(0))(_ + _)
-    val nulls = Observation("paced_null_ts")
-    val tagged = withD
-      .observe(nulls, count(when(ts.isNull, 1)).as("n"))
-      .withColumn("__slice", slice)
-      .drop("__ts_d").drop(dropCols: _*)
+    * A row with a null `__slice` has no slice, so it is refused rather
+    * than dropped: the write puts such rows in Spark's null partition, and
+    * the publish fails with `unsliced` when that partition exists, before
+    * any slice is committed, leaving `dir` as it was (no extra scan on
+    * success). */
+  private def commitSlices(tagged: DataFrame, slices: Int, dir: String,
+                           unsliced: String = "every row needs a slice"): Unit = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.DEFAULT_PARTITION_NAME
     val staging = stagingDir(dir)
     try {
       tagged.repartition(slices, col("__slice"))
         .write.partitionBy("__slice").parquet(staging.toString)
-      val nNull = nulls.get("n").asInstanceOf[Long]
-      require(nNull == 0, s"paced replay requires a non-null $tsCol on every " +
-        s"row; $nNull rows have none")
+      val nulls = staging.resolve(s"__slice=$DEFAULT_PARTITION_NAME")
+      require(!java.nio.file.Files.exists(nulls), s"$unsliced; " +
+        s"${tagged.sparkSession.read.parquet(nulls.toString).count()} rows have none")
       val files = (0 until slices).map { j =>
         val fs = dataFiles(staging.resolve(s"__slice=$j").toFile)
         require(fs.length <= 1, s"slice $j was written as ${fs.length} files")
@@ -293,33 +246,74 @@ object StreamRunner {
     } finally deleteTree(staging)
   }
 
+  /** Slice index of `ts` for ascending `boundaries`: the number of
+    * boundaries <= ts, so slice j holds `boundaries(j-1) <= ts <
+    * boundaries(j)`; null (no slice) for a null `ts`. */
+  private def sliceOf(ts: Column, boundaries: Seq[Any]): Column =
+    when(ts.isNotNull,
+      boundaries.map(b => when(ts >= lit(b), 1).otherwise(0)).foldLeft(lit(0))(_ + _))
+
+  /** One ordered bulk commit into `dir`, stamped past everything already
+    * there. A plain unstamped write carries wall-clock mtimes, and
+    * [[SliceStamper]] deliberately stamps AHEAD of the wall clock (2 s per
+    * slice) — so a bulk publish following a paced publish could land its
+    * files BETWEEN earlier slices in mtime order, turning earlier-range
+    * data into droppable late data. Used by [[Channels.publish]]. */
+  def writeOrderedCommit(df: DataFrame, dir: String): Unit =
+    commitSlices(df.withColumn("__slice", lit(0)), 1, dir)
+
+  /** Write `df` into `dir` as `slices` event-time-ordered file commits
+    * ([[commitSlices]]), quantile-split on `tsCol`: with `qs` the exact
+    * `slices`-quantiles of `tsCol`, slice j holds the rows with
+    * `qs(j-1) <= ts < qs(j)` (the first slice is open below, the last open
+    * above; tied boundaries leave a slice empty); an empty frame gives
+    * `slices` empty commits. The source is read at most twice, whatever
+    * `slices` is: once for the quantiles (not needed for one slice) and
+    * once for the commit's one write. A null `tsCol` has no slice: the
+    * publish fails, leaving `dir` as it was. Shared by [[replayPaced]] and
+    * the channel publisher ([[Channels]]). */
+  def writePacedSlices(df: DataFrame, tsCol: String, slices: Int,
+                       dir: String, dropCols: Seq[String] = Nil): Unit = {
+    require(slices >= 1, s"paced replay needs at least one slice, got $slices")
+    val withD = df.withColumn("__ts_d", col(tsCol).cast("double"))
+    // no boundaries for one slice, nor for an empty (or all-null) frame
+    val qs =
+      if (slices == 1) Array.empty[Double]
+      else withD.stat.approxQuantile(
+        "__ts_d", (1 until slices).map(_.toDouble / slices).toArray, 0.0)
+    commitSlices(
+      withD.withColumn("__slice", sliceOf(col("__ts_d"), qs.toSeq))
+        .drop("__ts_d").drop(dropCols: _*),
+      slices, dir, s"paced replay requires a non-null $tsCol on every row")
+  }
+
   /** Per-event-Δt slicing (the reference's simulate_session_stream.py:63-108
     * publish loop): one file commit per DISTINCT `tsCol` value, ascending,
     * so — opened with `maxFilesPerTrigger=1` — micro-batch k carries exactly
     * the events of the k-th timestamp. The reference sleeps each
     * inter-event gap before publishing; here the gap becomes commit order
-    * (correctness is event-time processing, never arrival pacing). Bounded:
-    * more than `maxTimes` distinct times is refused (each is a source pass
-    * and a micro-batch) — long spans belong to quantile-slice pacing
-    * ([[writePacedSlices]]). Returns the commit count. */
+    * (correctness is event-time processing, never arrival pacing). The
+    * source is read twice: once to collect the times, once for the
+    * commit's one write ([[commitSlices]]). Bounded: more than `maxTimes`
+    * distinct times is refused (each is a micro-batch) — long spans belong
+    * to quantile-slice pacing ([[writePacedSlices]]). Returns the commit
+    * count. */
   def writePerEventSlices(df: DataFrame, tsCol: String, dir: String,
                           maxTimes: Int, dropCols: Seq[String] = Nil): Int = {
-    import org.apache.spark.sql.functions.{col, lit}
     val times = df.select(col(tsCol)).distinct().orderBy(col(tsCol))
       .limit(maxTimes + 1).collect().map(_.get(0))
     require(times.nonEmpty, "per-event replay of an empty frame")
-    // fail fast, not silently: a null pace time cannot be ordered, and the
-    // per-time equality filter below would never match its rows — they
-    // would vanish from the replay (and the null would still burn one of
-    // the maxTimes commit slots on an empty slice)
+    // fail fast, before anything is written: a null pace time cannot be
+    // ordered (and would burn one of the maxTimes commit slots)
     require(!times.contains(null),
       s"per-event pacing requires a non-null $tsCol on every row")
     require(times.length <= maxTimes,
       s"per-event pacing supports at most $maxTimes distinct event times; " +
         "use speed-factor (quantile-slice) pacing for longer spans")
-    val stamper = new SliceStamper(dir)
-    for (t <- times)
-      commitSlice(df.filter(col(tsCol) === lit(t)).drop(dropCols: _*), dir, stamper)
+    // the k-th time is slice k: every time after the first is a boundary
+    commitSlices(
+      df.withColumn("__slice", sliceOf(col(tsCol), times.toSeq.drop(1))).drop(dropCols: _*),
+      times.length, dir)
     times.length
   }
 
@@ -335,8 +329,8 @@ object StreamRunner {
       .parquet(dir), n)
   }
 
-  /** Ordered multi-batch replay: write each slice as its own file-source
-    * commit (modification-time order = slice order) so that, opened with
+  /** Ordered multi-batch replay: commit each slice ([[commitSlices]],
+    * modification-time order = slice order) so that, opened with
     * `maxFilesPerTrigger=1` via `openSlices`, slice k is exactly micro-batch
     * k. Callers append far-future sentinel slices as EOF/flush punctuation:
     * watermark-gated emissions (outer-join null rows, final append-mode
@@ -345,18 +339,15 @@ object StreamRunner {
     * for free from continuing traffic, a bounded replay must punctuate.
     * Returns the dir; call `openSlices` once per required source instance
     * (twice for a self-join's two sides). */
-  def writeSlices(slices: Seq[DataFrame], tag: String): String = {
-    val key = slices.map(s => s"${graft.SessionToken(s.sparkSession)}|" +
-      s"${s.schema.catalogString}|" +
-      s"${s.queryExecution.logical.canonicalized.semanticHash()}|" +
-      s"${sourceSig(s)}").mkString("+")
-    replayCache.computeIfAbsent(key, { _ =>
+  def writeSlices(slices: Seq[DataFrame], tag: String): String =
+    replayCache.computeIfAbsent(slices.map(frameKey).mkString("+"), { _ =>
       val dir = tempDir(s"slices_$tag")
-      val stamper = new SliceStamper(dir)
-      slices.foreach(s => commitSlice(s, dir, stamper))
+      commitSlices(
+        slices.zipWithIndex.map { case (df, k) => df.withColumn("__slice", lit(k)) }
+          .reduce(_.unionByName(_)),
+        slices.length, dir)
       dir
     })
-  }
 
   def openSlices(spark: SparkSession, dir: String,
                  schema: org.apache.spark.sql.types.StructType): DataFrame =
@@ -373,23 +364,8 @@ object StreamRunner {
     * (cross-partition key hashing) exercised. Batch queries keep the
     * session's setting; on a real cluster this is sized to state volume,
     * not taken from the batch default. */
-  val StateParts: String = sys.env.getOrElse("SPARK_GRAFT_STATE_PARTS", "2")
+  val StateParts: String = "2"
 
-  /** `flush`: whether the query's OUTPUT depends on trailing no-data
-    * micro-batches. The bounded-replay flush design for watermark-gated
-    * APPEND emission (q19d's outer-join null rows, q20*'s final windows)
-    * RELIES on them: sentinel rows ride in the final data slice, its
-    * end-of-batch watermark clears everything real, and the no-data
-    * batch(es) AvailableNow keeps running while stateful operators have
-    * pending work execute the evictions that EMIT those results — pinned
-    * on, because turning it off would silently EMPTY those sinks.
-    * Queries whose emission is EAGER (inner joins, dropDuplicates*,
-    * update-mode aggregation, NoTimeout flatMapGroupsWithState) emit
-    * everything during the data batches; their trailing no-data batch is a
-    * pure state-eviction scan producing zero output rows (measured ~0.3–1 s
-    * per stateful operator at sf0.1) — those pass `flush = false` and skip
-    * it. Production streams keep the default: there, eviction IS the
-    * mechanism that bounds state. */
   /** Run a streaming frame to completion with a caller-supplied
     * `foreachBatch` body — the `toParquet`/`toUpsert` lifecycle
     * (AvailableNow trigger, bounded await, state-store unload) exposed for
@@ -411,6 +387,22 @@ object StreamRunner {
       awaitAndUnload(q, tag)
     }
 
+  /** Run `f` (a runner's query) on [[StateParts]] state partitions.
+    * `flush`: whether the query's OUTPUT depends on trailing no-data
+    * micro-batches. The bounded-replay flush design for watermark-gated
+    * APPEND emission (q19d's outer-join null rows, q20*'s final windows)
+    * RELIES on them: sentinel rows ride in the final data slice, its
+    * end-of-batch watermark clears everything real, and the no-data
+    * batch(es) AvailableNow keeps running while stateful operators have
+    * pending work execute the evictions that EMIT those results — pinned
+    * on, because turning it off would silently EMPTY those sinks.
+    * Queries whose emission is EAGER (inner joins, dropDuplicates*,
+    * update-mode aggregation, NoTimeout flatMapGroupsWithState) emit
+    * everything during the data batches; their trailing no-data batch is a
+    * pure state-eviction scan producing zero output rows (measured ~0.3–1 s
+    * per stateful operator at sf0.1) — those pass `flush = false` and skip
+    * it. Production streams keep the default: there, eviction IS the
+    * mechanism that bounds state. */
   private def withStateParts[T](spark: SparkSession, flush: Boolean)(f: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     val old = spark.conf.get(key)
@@ -479,7 +471,6 @@ object StreamRunner {
     * exactly-once from the checkpointed source offsets. */
   def toUpsert(spark: SparkSession, sdf: DataFrame, keys: Seq[String],
                tag: String, flush: Boolean = true): DataFrame = {
-    import org.apache.spark.sql.functions.col
     val base = tempDir(s"upsert_$tag")
     @volatile var current: Option[String] = None
     withStateParts(spark, flush) {
@@ -511,8 +502,7 @@ object StreamRunner {
   }
 
   /** Run an append-mode streaming frame to a parquet sink (row-level
-    * results too big for the driver) and read the sink back. */
-  /** `checkpoint`: pass a caller-owned location (e.g. a [[Channels]]
+    * results too big for the driver) and read the sink back. `checkpoint`: pass a caller-owned location (e.g. a [[Channels]]
     * subscription's delivery cursor) so consumption is durable across runs;
     * defaults to a fresh scratch dir (one-shot replay semantics). */
   def toParquet(spark: SparkSession, sdf: DataFrame, tag: String,

@@ -47,14 +47,17 @@ class PacedReplaySpec extends SparkSpec {
   }
 
   test("per-event pacing refuses a null pace timestamp instead of dropping rows") {
-    // null never satisfies the per-time equality filter, so its rows would
-    // silently vanish from the replay — the primitive must fail fast
+    // a null time cannot be ordered into a commit, so its rows would
+    // silently vanish from the replay — the primitive must fail fast,
+    // before anything is written
     val df = spark.range(3).selectExpr("id AS v",
       "IF(id = 1, CAST(NULL AS timestamp), timestamp_seconds(1704067200 + id)) AS ts")
+    val dir = TempDirs.create("graft_nullts_")
     val e = intercept[IllegalArgumentException](
-      StreamRunner.writePerEventSlices(df, "ts", TempDirs.create("graft_nullts_"),
-        maxTimes = 10))
+      StreamRunner.writePerEventSlices(df, "ts", dir, maxTimes = 10))
     assert(e.getMessage.contains("non-null"))
+    assert(new java.io.File(dir).list().isEmpty,
+      s"left behind: ${new java.io.File(dir).list().mkString(",")}")
   }
 
   test("scale-up text perturbation is never the identity for replicas 1..99") {

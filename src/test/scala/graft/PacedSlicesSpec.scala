@@ -7,9 +7,10 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-/** The layout [[StreamRunner.writePacedSlices]] commits: one visible,
-  * uniquely named file per quantile slice, in slice order by mtime, with
-  * every row in exactly the slice its timestamp selects — and the
+/** The layout every StreamRunner publisher commits: one visible, uniquely
+  * named file per slice, in slice order by mtime, with every row in exactly
+  * the slice it was assigned — quantile slices by timestamp, per-event
+  * slices by distinct time, explicit slices, bulk commits — and the
   * degenerate inputs (empty frame, null pace values). */
 class PacedSlicesSpec extends SparkSpec {
   import spark.implicits._
@@ -43,7 +44,22 @@ class PacedSlicesSpec extends SparkSpec {
     }
   }
 
-  test("paced slices commit one visible file per slice, in slice order") {
+  /** `dir` holds exactly one visible, uniquely named commit per entry of
+    * `want`, in order by mtime, each with that entry's ids — and nothing
+    * else (no staging dir, no stray files). */
+  private def assertLayout(dir: String, want: Seq[Set[Long]]): Unit = {
+    val got = commits(dir)
+    assert(got.length === want.length, s"commits: ${got.map(_.getName)}")
+    assert(got.map(_.getName).distinct.length === want.length)
+    assert(got.forall(f => !f.getName.startsWith(".") && !f.getName.startsWith("_")))
+    assert(got.map(_.lastModified()).distinct.length === want.length,
+      "tied commit mtimes leave the replay order undefined")
+    assert(got.map(ids) === want)
+    assert(new File(dir).list().toSet === got.map(_.getName).toSet)
+  }
+
+  test("every publisher commits one visible file per slice, in slice order") {
+    // quantile slices: four leave a middle slice empty, one is the whole frame
     for (slices <- Seq(4, 1)) {
       val dir = TempDirs.create("graft_paced_layout_")
       StreamRunner.writePacedSlices(tied, "ts", slices, dir)
@@ -51,16 +67,21 @@ class PacedSlicesSpec extends SparkSpec {
       if (slices == 4)
         assert(want.slice(1, slices - 1).exists(_.isEmpty),
           s"fixture must leave a middle slice empty: $want")
-      val got = commits(dir)
-      assert(got.length === slices, s"commits: ${got.map(_.getName)}")
-      assert(got.map(_.getName).distinct.length === slices)
-      assert(got.forall(f => !f.getName.startsWith(".") && !f.getName.startsWith("_")))
-      assert(got.map(_.lastModified()).distinct.length === slices,
-        "tied commit mtimes leave the replay order undefined")
-      assert(got.map(ids) === want)
-      // nothing else is left behind: no staging dir, no stray files
-      assert(new File(dir).list().toSet === got.map(_.getName).toSet)
+      assertLayout(dir, want)
     }
+    // per event: one commit per distinct time (1, 2, 5, 7, 8 s), in time order
+    val perEvent = TempDirs.create("graft_pevent_layout_")
+    assert(StreamRunner.writePerEventSlices(tied, "ts", perEvent, maxTimes = 5) === 5)
+    assertLayout(perEvent, Seq(Set(0L), Set(1L), Set(2L, 3L, 4L, 5L), Set(6L), Set(7L)))
+    // explicit slices, the middle one empty
+    val slices = Seq(tied.filter($"id" < 3), tied.filter($"id" < 0), tied.filter($"id" >= 3))
+    assertLayout(StreamRunner.writeSlices(slices, "layout"),
+      Seq(Set(0L, 1L, 2L), Set.empty[Long], Set(3L, 4L, 5L, 6L, 7L)))
+    // two bulk commits into one dir, the second ordered after the first
+    val bulk = TempDirs.create("graft_bulk_layout_")
+    StreamRunner.writeOrderedCommit(tied.filter($"id" < 4), bulk)
+    StreamRunner.writeOrderedCommit(tied.filter($"id" >= 4), bulk)
+    assertLayout(bulk, Seq(Set(0L, 1L, 2L, 3L), Set(4L, 5L, 6L, 7L)))
   }
 
   test("an empty frame publishes `slices` empty commits and replays no rows") {

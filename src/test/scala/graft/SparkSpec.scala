@@ -16,6 +16,7 @@ object TestSession {
       // the engine's class-loader setup (GraftSession): one executor class
       // loader, so one codegen cache, shared by every session and query
       .config("spark.sql.artifact.isolation.enabled", "false")
+      .config("spark.sql.streaming.sessionWindow.merge.sessions.in.local.partition", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
