@@ -1,8 +1,9 @@
 #!/usr/bin/env bash
 # Run a graft main class via plain java (no sbt lock) with the SAME JVM
-# options build.sbt's forked run uses — for tooling runs (ScaleUp, probes)
+# options build.sbt's forked run uses — for tooling runs (ScaleUp, Profile)
 # that must not queue behind a long sbt test session. Usage:
-#   bench/java_run.sh graft.tools.ScaleUp <args...>
+#   bench/java_run.sh graft.tools.ScaleUp <srcDir> <dstDir> <factor> [tables] [novelPct]
+#   bench/java_run.sh graft.tools.Profile <sfDir> <target>[,<target>...] [passes=2] [planDir]
 set -euo pipefail
 cd "$(dirname "$0")/.."
 CLASSES=target/scala-2.13/classes

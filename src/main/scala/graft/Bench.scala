@@ -1,22 +1,38 @@
 package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 import java.util.concurrent.atomic.AtomicLong
 
 /** Per-query task-metric totals, accumulated from the listener bus so a
   * bench run is self-diagnosing: wall time alone cannot distinguish "slow
   * plan" from "the host was spilling / GC-bound during this query" (the
   * round-6 driver-bench heavy-tail question — VERDICT r6 Next-round #1).
-  * Counters are cumulative; [[Bench]] diffs snapshots around each query.
+  * Counters are cumulative; [[Bench.measure]] diffs snapshots around each
+  * action and takes the jobs that ended inside it.
   */
 final class TaskMetricsListener extends SparkListener {
   private val jobsStarted, jobsEnded = new AtomicLong
-  // shw shr memSpill diskSpill gcMs runMs tasks cpuMs — runMs is wall-clock
-  // inside the task while cpuMs is scheduler-charged CPU; run ≫ cpu at
-  // constant bytes/spill/GC means the task threads were descheduled (host
-  // CPU contention), the one cause wall time alone can never prove.
-  private[this] val c = Array.fill(8)(new AtomicLong)
-  override def onJobStart(e: SparkListenerJobStart): Unit = { jobsStarted.incrementAndGet(); () }
-  override def onJobEnd(e: SparkListenerJobEnd): Unit = { jobsEnded.incrementAndGet(); () }
+  // shw shr memSpill diskSpill gcMs runMs tasks cpuMs inputB — runMs is
+  // wall-clock inside the task while cpuMs is scheduler-charged CPU; run ≫
+  // cpu at constant bytes/spill/GC means the task threads were descheduled
+  // (host CPU contention), the one cause wall time alone can never prove.
+  private[this] val c = Array.fill(9)(new AtomicLong)
+  // job id -> (start time, description) while running; (id, wall ms,
+  // description) once ended, until taken
+  private[this] val running = new ConcurrentHashMap[Int, (Long, String)]()
+  private[this] val ended = new ConcurrentLinkedQueue[(Int, Long, String)]()
+  override def onJobStart(e: SparkListenerJobStart): Unit = {
+    // the job's description if one was set, else its call site (the name
+    // of its final stage, e.g. "save at Profile.scala:120")
+    val desc = Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+      .orElse(e.stageInfos.maxByOption(_.stageId).map(_.name)).getOrElse("")
+    running.put(e.jobId, (e.time, desc))
+    jobsStarted.incrementAndGet(); ()
+  }
+  override def onJobEnd(e: SparkListenerJobEnd): Unit = {
+    Option(running.remove(e.jobId)).foreach { case (t0, d) => ended.add((e.jobId, e.time - t0, d)) }
+    jobsEnded.incrementAndGet(); ()
+  }
   override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
     val m = e.taskMetrics
     if (m != null) {
@@ -28,6 +44,7 @@ final class TaskMetricsListener extends SparkListener {
       c(5).addAndGet(m.executorRunTime)
       c(6).addAndGet(1L)
       c(7).addAndGet(m.executorCpuTime / 1000000L)
+      c(8).addAndGet(m.inputMetrics.bytesRead)
       ()
     }
   }
@@ -41,6 +58,9 @@ final class TaskMetricsListener extends SparkListener {
     Thread.sleep(60)
   }
   def snapshot(): Array[Long] = c.map(_.get)
+  /** The jobs ended since the last call: (job id, wall ms, description). */
+  def takeJobs(): Seq[(Int, Long, String)] =
+    Iterator.continually(ended.poll()).takeWhile(_ != null).toSeq
 }
 
 /** Benchmark main: runs every SparkEntry query three times on
@@ -63,6 +83,70 @@ final class TaskMetricsListener extends SparkListener {
   * BASELINE.md's per-query table uses); values are seconds to 3 decimals.
   */
 object Bench {
+
+  /** Column names of a [[measure]] row, in order. Reference captures are
+    * read by name ([[bestPassRows]]), so new columns are only appended. */
+  private[graft] val cols: Seq[String] = Seq("ms", "shuffle_write_b",
+    "shuffle_read_b", "spill_mem_b", "spill_disk_b", "task_gc_ms", "task_run_ms",
+    "tasks", "task_cpu_ms", "driver_gc_ms", "proc_cpu_ms", "load_x100", "jit_ms",
+    "janino_compiles", "input_b")
+
+  /** One timed action: its row (named by [[cols]]) and the Spark jobs that
+    * ended inside it as (job id, wall ms, description). */
+  private[graft] final case class Measurement(row: Array[Long], jobs: Seq[(Int, Long, String)])
+
+  private val gcBeans = java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
+  private def driverGcMs(): Long = {
+    var t = 0L; gcBeans.forEach(b => t += math.max(0L, b.getCollectionTime)); t
+  }
+  // Whole-process CPU and host load: together with task cpu-vs-run these
+  // attribute a slow query to (a) the engine (cpu ≈ run, both high),
+  // (b) this JVM outside tasks (proc cpu ≫ task cpu), or (c) another
+  // process on the host (run ≫ cpu, load ≫ cpus) — the three hypotheses
+  // the round-5..7 heavy-tail investigations kept having to infer.
+  private val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
+  private def procCpuMs(): Long = osBean match {
+    case b: com.sun.management.OperatingSystemMXBean => b.getProcessCpuTime / 1000000L
+    case _ => -1L
+  }
+  private def loadX100(): Long = math.round(math.max(0.0, osBean.getSystemLoadAverage) * 100)
+  private val compBean = java.lang.management.ManagementFactory.getCompilationMXBean
+  private def jitMs(): Long =
+    if (compBean != null && compBean.isCompilationTimeMonitoringSupported)
+      compBean.getTotalCompilationTime else -1L
+  // Janino source-compilation count (exact, monotonic): a warm-pass query
+  // that shows compiles > 0 took a codegen-cache MISS and re-ran janino —
+  // the remaining in-JVM hypothesis for bimodal warm rows (q18b's 1.4 s vs
+  // 6 s modes) that task cpu / jit / bytes alone cannot separate.
+  private def janinoCompiles(): Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  /** Time one action the way every bench row is taken: drain the listener
+    * bus, snapshot, run, drain again, diff. `ms` covers the whole action
+    * (for a registry query: building the frame, which runs its eager
+    * materializations and bounded stream replays, plus the write). The
+    * action's exceptions propagate. */
+  private[graft] def measure(listener: TaskMetricsListener)(action: => Unit): Measurement = {
+    listener.drain()
+    listener.takeJobs()
+    val before = listener.snapshot(); val gc0 = driverGcMs(); val pc0 = procCpuMs()
+    val jit0 = jitMs(); val jan0 = janinoCompiles()
+    val t0 = System.nanoTime()
+    action
+    val ms = (System.nanoTime() - t0) / 1000000L
+    listener.drain()
+    val d = listener.snapshot().zip(before).map { case (a, b) => a - b }
+    Measurement((ms +: d.take(8)) ++ Array(driverGcMs() - gc0, procCpuMs() - pc0,
+      loadX100(), jitMs() - jit0, janinoCompiles() - jan0) ++ d.drop(8), listener.takeJobs())
+  }
+
+  /** Slowest-first order of the bench line's keys, for the bounded inline
+    * map: ranked by the reference capture's figure so that which queries
+    * make the cut does not flip with this run's noise; a key with no
+    * reference row ranks by this run's figure. */
+  private[graft] def slowestFirst(keys: Seq[String], current: Map[String, Double],
+                                  reference: Map[String, Double]): Seq[String] =
+    keys.sortBy(k => -reference.getOrElse(k, current(k)))
 
   /** Parse the `"queries":{...}` object out of a bench JSON line (the format
     * of the reference captures under bench/). Keys are plain `qNN[x]`
@@ -405,60 +489,22 @@ object Bench {
     // the rows — the closest local analogue of writing the result out.
     val listener = new TaskMetricsListener
     spark.sparkContext.addSparkListener(listener)
-    val gcBeans = java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-    def driverGcMs(): Long = {
-      var t = 0L; gcBeans.forEach(b => t += math.max(0L, b.getCollectionTime)); t
-    }
-    // Whole-process CPU and host load: together with task cpu-vs-run these
-    // attribute a slow query to (a) the engine (cpu ≈ run, both high),
-    // (b) this JVM outside tasks (proc cpu ≫ task cpu), or (c) another
-    // process on the host (run ≫ cpu, load ≫ cpus) — the three hypotheses
-    // the round-5..7 heavy-tail investigations kept having to infer.
-    val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-    def procCpuMs(): Long = osBean match {
-      case b: com.sun.management.OperatingSystemMXBean => b.getProcessCpuTime / 1000000L
-      case _ => -1L
-    }
-    def loadX100(): Long = math.round(math.max(0.0, osBean.getSystemLoadAverage) * 100)
-    val compBean = java.lang.management.ManagementFactory.getCompilationMXBean
-    def jitMs(): Long =
-      if (compBean != null && compBean.isCompilationTimeMonitoringSupported)
-        compBean.getTotalCompilationTime else -1L
-    // Janino source-compilation count (exact, monotonic): a warm-pass query
-    // that shows compiles > 0 took a codegen-cache MISS and re-ran janino —
-    // the remaining in-JVM hypothesis for bimodal warm rows (q18b's 1.4 s vs
-    // 6 s modes) that task cpu / jit / bytes alone cannot separate.
-    def janinoCompiles(): Long =
-      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    // name -> [sec*1000, shuffleWriteB, shuffleReadB, memSpillB, diskSpillB,
-    //          taskGcMs, taskRunMs, tasks, taskCpuMs, driverGcMs, procCpuMs,
-    //          loadX100, jitMs, janinoCompiles] per pass
+    // (pass, name) -> measure's row
     val metricLog = scala.collection.mutable.LinkedHashMap.empty[(String, String), Array[Long]]
-    def once(pass: String, name: String): Double = {
-      listener.drain()
-      val before = listener.snapshot(); val gc0 = driverGcMs(); val pc0 = procCpuMs()
-      val jit0 = jitMs(); val jan0 = janinoCompiles()
-      val t0 = System.nanoTime()
+    def once(pass: String, name: String): Double =
       try {
-        SparkEntry.queries(name)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-      }
-      catch {
+        val row = measure(listener) {
+          SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
+        }.row
+        metricLog((pass, name)) = row
+        row(0) / 1000.0
+      } catch {
         case t: Throwable =>
           // surfaced in the JSON below: a broken query must not silently
           // shrink the total and masquerade as a faster run
           System.err.println(s"[bench] $name FAILED: ${t.getClass.getName}: ${t.getMessage}")
-          return -1.0
+          -1.0
       }
-      val sec = (System.nanoTime() - t0) / 1e9
-      listener.drain()
-      val after = listener.snapshot()
-      metricLog((pass, name)) =
-        ((sec * 1000).toLong +: after.zip(before).map { case (a, b) => a - b }) ++
-          Array(driverGcMs() - gc0, procCpuMs() - pc0, loadX100(), jitMs() - jit0,
-            janinoCompiles() - jan0)
-      sec
-    }
     // optional arg (local dev only; the driver passes none): substring
     // filter to bench a subset while iterating — mirrors Verify's 3rd arg
     val only: String => Boolean =
@@ -567,26 +613,6 @@ object Bench {
       if (!s.contains('.')) s
       else s.reverse.dropWhile(_ == '0').dropWhile(_ == '.').reverse
     }
-    // Full per-query map, and a bounded builder for when the suite has
-    // outgrown the stdout window (round 13: 168 queries render ~1850 chars
-    // of map alone — the r12 driver capture shows `parsed: null` with the
-    // line's head clipped, i.e. the map itself no longer fits and no trip-
-    // payload degradation can save it). The bounded form keeps the SLOWEST
-    // entries (the ones BASELINE quotes and regressions show up in) rendered
-    // in name order, and adds "queries_n" so a truncated map is self-
-    // describing; the untruncated line always lands in bench/line_full.json
-    // (committed), which the protocol runner archives as the capture — so
-    // promoted references keep full tripwire coverage.
-    def qsWith(limit: Int): String = {
-      val kept =
-        if (limit >= names.size) names
-        else {
-          val keep = names.sortBy(n => -warm(n)).take(limit).toSet
-          names.filter(keep)
-        }
-      kept.map(n => s""""${key(n)}":${fmtQ(warm(n))}""").mkString("{", ",", "}")
-    }
-    val qs = qsWith(Int.MaxValue)
     val total = warm.values.filter(_ >= 0).sum
     val coldTotal = cold.values.filter(_ >= 0).sum
     // raw single-pass warm total alongside the min(mid,warm) composite, so a
@@ -622,6 +648,24 @@ object Bench {
       } else Map.empty[String, Double]
     } catch { case scala.util.control.NonFatal(_) => Map.empty[String, Double] }
     val reportedByKey = names.map(n => key(n) -> warm(n)).toMap
+    // Full per-query map, and a bounded builder for when the suite has
+    // outgrown the stdout window (round 13: 168 queries render ~1850 chars
+    // of map alone — the r12 driver capture shows `parsed: null` with the
+    // line's head clipped, i.e. the map itself no longer fits and no trip-
+    // payload degradation can save it). The bounded form keeps the SLOWEST
+    // entries (the ones BASELINE quotes and regressions show up in; ranked
+    // by the reference so the kept set is stable across runs) rendered
+    // in name order, and adds "queries_n" so a truncated map is self-
+    // describing; the untruncated line always lands in bench/line_full.json
+    // (committed), which the protocol runner archives as the capture — so
+    // promoted references keep full tripwire coverage.
+    val ranked = slowestFirst(names.map(key), reportedByKey, reference)
+    def qsWith(limit: Int): String = {
+      val keep = ranked.take(limit).toSet
+      names.filter(n => keep(key(n)))
+        .map(n => s""""${key(n)}":${fmtQ(warm(n))}""").mkString("{", ",", "}")
+    }
+    val qs = qsWith(Int.MaxValue)
     val tripped = tripwire(reportedByKey, reference)
     if (tripped.nonEmpty) System.err.println("[bench] TRIPWIRE (>1.5x reference in both post-JIT passes): " +
       tripped.map(k => f"$k=${reportedByKey(k)}%.2fs/ref=${reference(k)}%.2fs").mkString(" "))
@@ -631,9 +675,6 @@ object Bench {
     // produced bench/reference.json). Both sides use the better post-JIT
     // pass (the one the min reported): if even that pass is elevated, that
     // is the row to explain.
-    val cols = Seq("ms", "shuffle_write_b", "shuffle_read_b", "spill_mem_b",
-      "spill_disk_b", "task_gc_ms", "task_run_ms", "tasks", "task_cpu_ms",
-      "driver_gc_ms", "proc_cpu_ms", "load_x100", "jit_ms", "janino_compiles")
     val refMetricsPath =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_REF_METRICS", "bench/reference.metrics.json")
     // key -> named best-pass row of the reference capture (empty on absence
@@ -791,8 +832,7 @@ object Bench {
         // entries (K fitted greedily against the most-informative stage that
         // the overhead allows), self-described via "queries_n".
         val overhead = lineWith(math.min(3, n), 0, "{}", Some(names.size)).length - 2
-        val byTime = names.sortBy(nm => -warm(nm))
-          .map(nm => s""""${key(nm)}":${fmtQ(warm(nm))}""")
+        val byTime = ranked.map(k => s""""$k":${fmtQ(reportedByKey(k))}""")
         var used = overhead + 2 // re-add the "{}" the map will carry
         var k = 0
         while (k < byTime.size && used + byTime(k).length + (if (k > 0) 1 else 0) <= 1992) {

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.SparkSession
+
 /** Plan-inspection main: dumps `explain("formatted")` for a representative
   * slice of the query inventory (scan pushdown, broadcast chains, top-k,
   * window, LSH self-join, streaming-batch shapes) so plan quality is
@@ -86,13 +88,23 @@ object Explain {
 
   /** The streaming members of the BENCH_r08 heavy tail (VERDICT r8 #4):
     * their incremental shapes (append-mode eviction, the stream-static band
-    * join) exist only in the executed micro-batch plan, so each query is RUN
-    * and its last micro-batch plan read back from
-    * [[graft.streaming.StreamRunner.lastStreamingPlan]]. */
-  val StreamingTail: Seq[(String, String)] = Seq(
-    ("q19d_stream_outer_join", "q19d"), // interval outer join, watermark eviction
-    ("q20b_session_window", "q20b"), // session windows, append-mode eviction
-    ("q29c_stream_neardup_gate", "q29c")) // stream-static band-index join
+    * join) exist only in the executed micro-batch plan, which [[planText]]
+    * appends after running the query. */
+  val StreamingTail: Seq[String] = Seq(
+    "q19d_stream_outer_join", // interval outer join, watermark eviction
+    "q20b_session_window", // session windows, append-mode eviction
+    "q29c_stream_neardup_gate") // stream-static band-index join
+
+  /** The formatted plan of registry query `fullName`, plus the last executed
+    * micro-batch plan when building it ran a bounded stream (the batch frame
+    * is then only the sink read). StreamRunner tags a query's streams with
+    * its short `qNN[x]` prefix, which is how the plan is found. */
+  def planText(spark: SparkSession, fullName: String, dir: String): String = {
+    val planned = SparkEntry.queries(fullName)(spark, dir).queryExecution
+      .explainString(org.apache.spark.sql.execution.FormattedMode)
+    planned + graft.streaming.StreamRunner.lastStreamingPlan(fullName.takeWhile(_ != '_'))
+      .map(p => s"\n-- last executed micro-batch plan --\n$p").getOrElse("")
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
@@ -102,11 +114,7 @@ object Explain {
     sb.append("# Physical plans (generated by `graft.Explain`)\n\n")
     sb.append(s"Input: `$sfDir`. AQE on (plans shown pre-execution).\n")
     Representative.foreach { name =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      sb.append(s"\n## $name\n\n```\n")
-      sb.append(df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
-      sb.append("```\n")
+      sb.append(s"\n## $name\n\n```\n${planText(spark, name, sfDir)}```\n")
     }
     // q43's registry entry returns the materialized result table (the Bloom
     // confs apply only while it is built), so its plan is explained from
@@ -121,14 +129,10 @@ object Explain {
         org.apache.spark.sql.execution.FormattedMode))
       sb.append("```\n")
     }
-    StreamingTail.foreach { case (name, tag) =>
-      // building the frame RUNS the bounded replay (StreamRunner is eager);
-      // the interesting artifact is the captured micro-batch plan
-      SparkEntry.queries(name)(spark, sfDir)
+    // building the frame RUNS the bounded replay (StreamRunner is eager)
+    StreamingTail.foreach { name =>
       sb.append(s"\n## $name (last executed micro-batch)\n\n```\n")
-      sb.append(graft.streaming.StreamRunner.lastStreamingPlan(tag)
-        .getOrElse("<no micro-batch executed>"))
-      sb.append("```\n")
+      sb.append(s"${planText(spark, name, sfDir)}```\n")
     }
     Files.writeString(Paths.get(out), sb.toString)
     println(s"wrote $out")

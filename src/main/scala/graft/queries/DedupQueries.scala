@@ -765,7 +765,7 @@ object DedupQueries {
 
   /** Nights in the q63i/q63j compounding chain (batches doc_id % 7 == 0,
     * 1, …, ChainNights−1 against a base of doc_id % 7 ≥ ChainNights). */
-  private[queries] val ChainNights = 3
+  private[graft] val ChainNights = 3
 
   /** MULTI-NIGHT COMPOUNDING of the incremental SA index (VERDICT r15
     * #1): night k merges batch doc_id % 7 == k into night k−1's standing
@@ -791,7 +791,7 @@ object DedupQueries {
     * always the % 7 >= ChainNights split, so night k's inputs are
     * identical however many nights follow). Materialize caching makes
     * successive calls pay ONLY the new night — the per-night growth
-    * probe's instrument (tools.IncrProbe). */
+    * probe's instrument (Profile `sa_night<k>`). */
   private[graft] def saChainUpTo(s: SparkSession, dir: String,
                                  nights: Int): (DataFrame, DataFrame) = {
     require(nights >= 0 && nights <= ChainNights, s"nights 0..$ChainNights")

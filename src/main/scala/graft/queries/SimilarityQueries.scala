@@ -107,7 +107,7 @@ object SimilarityQueries {
   /** SemDeDup's target CLUSTER SIZE — the quantity the production recipe
     * holds constant as the corpus grows (Abbas et al. 2023 fix cluster
     * size, not cluster count). The measured rule (BASELINE.md round 8,
-    * tools/KScaling): fixed k=8 blows up 6.8× on ×20 data (cluster size
+    * Profile `semdedup_k<k>`): fixed k=8 blows up 6.8× on ×20 data (cluster size
     * doubles per doubling ⇒ quadratic within-cluster work), while k=16 at
     * ×20 — exactly this constant — returns the curve to 2.6×/doubling.
     * 2500 reproduces those measured points: ceil(n/2500) clamped at KmK
@@ -183,7 +183,7 @@ object SimilarityQueries {
       // lineage-truncation step of iterative Spark algorithms — without
       // it every downstream branch (next iteration's centroids, the
       // final cent/sizes pair) re-executes the whole unrolled chain
-      // non-default k (the KScaling measurement tool) gets its own tags so
+      // non-default k (Profile's `semdedup_k<k>` frames) gets its own tags so
       // it cannot clobber or absorb q24f/q24h's shared artifacts
       val tag = if (k == KmK) s"q24f_asg$t" else s"q24f_asg${t}_k$k"
       lastAsg = Materialize(s, dir, tag)(scored
@@ -198,7 +198,7 @@ object SimilarityQueries {
   /** q24h's body: cluster-blocked within-cluster near-dup detection,
     * keep = lowest id per neighborhood, with k derived from the corpus by
     * [[autoK]] — the production rule IS the code path. The explicit-k
-    * overload exists for the KScaling measurement tool (demonstrating the
+    * overload exists for Profile's `semdedup_k<k>` frames (demonstrating the
     * fixed-k blow-up requires pinning k): pairwise work is quadratic in
     * CLUSTER size, so doubling the corpus at fixed k quadruples it, while
     * k ∝ n restores the cluster size and the cost curve. */
@@ -2139,7 +2139,7 @@ object SimilarityQueries {
   /** The NIGHTLY MARGINAL work of q24p in one frame: tonight's batch
     * PQ-encoded against the frozen codebook and routed to frozen cells —
     * what the append writes. Exposed for the growth probe
-    * (tools.IncrProbe): its cost is the per-night update cost, measured
+    * (Profile `ann_encode_batch`): its cost is the per-night update cost, measured
     * beside the from-scratch re-encode it replaces. */
   private[graft] def q24pBatchEncodeFrame(s: SparkSession, dir: String): DataFrame = {
     val a = q24pArtifacts(s, dir)

@@ -1,9 +1,8 @@
 package graft.tools
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
+
+import graft.{Bench, TaskMetricsListener}
 
 /** ANN cell-count crossover capture (VERDICT r10 #3):
   * `runMain graft.tools.AnnCellScale <sfDir> <nCells> <probes> [passes]`.
@@ -19,31 +18,15 @@ import org.apache.spark.sql.DataFrame
   * probe filter vs statically partition-pruned scan of codes laid out
   * partitionBy(cell).
   *
-  * Protocol mirrors [[graft.Bench]]: all one-time artifacts (codebooks,
-  * codes, the partitioned layout, the k-means cells) are built in an
-  * UNTIMED warm pass — they are layout jobs, not serving cost — then each
-  * variant runs `passes` timed noop-sink passes; reported figure = min of
-  * the post-JIT passes. Per-pass scan input bytes and shuffle writes are
-  * captured from the listener bus (input bytes are the layout's claim:
-  * pruned ≈ probed-fraction × flat). The two variants' results are
-  * asserted IDENTICAL before anything is timed — same codebooks, same
-  * probe map, only the read path differs.
+  * All one-time artifacts (codebooks, codes, the partitioned layout, the
+  * k-means cells) are built in an UNTIMED warm pass, then each variant runs
+  * `passes` noop-sink passes, each one [[graft.Bench.measure]]; reported
+  * figure = min of the post-JIT passes, with its scan input bytes (the
+  * layout's claim: pruned ≈ probed-fraction × flat) and shuffle writes.
+  * The two variants' results are asserted IDENTICAL before anything is
+  * timed — same codebooks, same probe map, only the read path differs.
   */
 object AnnCellScale {
-
-  private final class IoListener extends SparkListener {
-    val input, shuffleW, tasks = new AtomicLong
-    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-      val m = e.taskMetrics
-      if (m != null) {
-        input.addAndGet(m.inputMetrics.bytesRead)
-        shuffleW.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        tasks.incrementAndGet()
-        ()
-      }
-    }
-    def snap(): (Long, Long) = (input.get, shuffleW.get)
-  }
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 3, "usage: AnnCellScale <sfDir> <nCells> <probes> [passes]")
@@ -51,8 +34,9 @@ object AnnCellScale {
     val nCells = args(1).toInt
     val probes = args(2).toInt
     val passes = if (args.length > 3) args(3).toInt else 3
+    require(passes >= 2, s"passes must be at least 2 (the first is JIT warm-up), got $passes")
     val spark = graft.GraftSession.get()
-    val listener = new IoListener
+    val listener = new TaskMetricsListener
     spark.sparkContext.addSparkListener(listener)
     val (flat, pruned) =
       graft.queries.SimilarityQueries.ivfpqAtScale(spark, dir, nCells, probes)
@@ -72,18 +56,12 @@ object AnnCellScale {
       "flat and partitioned admitted different (qid, rank, vec_id) triples")
     val maxCosDelta = a.zip(b).map { case (x, y) => math.abs(x._4 - y._4) }.max
     require(maxCosDelta <= 1e-9, f"cos diverges between read paths: $maxCosDelta%.2e")
-    def timed(df: DataFrame): (Double, Long, Long) = {
-      Thread.sleep(200) // let trailing listener events drain
-      val (i0, s0) = listener.snap()
-      val t0 = System.nanoTime()
-      df.write.mode("overwrite").format("noop").save()
-      val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(200)
-      val (i1, s1) = listener.snap()
-      (sec, i1 - i0, s1 - s0)
-    }
     def run(tag: String, df: DataFrame): (Double, Long, Long) = {
-      val all = (1 to passes).map(_ => timed(df))
+      val all = (1 to passes).map { _ =>
+        val row = Bench.cols.zip(
+          Bench.measure(listener)(df.write.mode("overwrite").format("noop").save()).row).toMap
+        (row("ms") / 1000.0, row("input_b"), row("shuffle_write_b"))
+      }
       val best = all.drop(1).minBy(_._1) // post-JIT min, Bench's rule
       System.err.println(s"[annscale] $tag passes=" +
         all.map(p => f"${p._1}%.2fs/${p._2 / 1e6}%.1fMB").mkString(" "))

@@ -1,7 +1,6 @@
 package graft.tools
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
-
+import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -32,8 +31,7 @@ object ScaleUp {
 
   def main(args: Array[String]): Unit = {
     // optional 4th arg: comma-separated subset of the big tables to scale
-    // (the rest are byte-copied) — a single-table stress corpus (e.g. the
-    // ×100 embeddings dir for the ANN crossover capture) should not pay
+    // (the rest are copied) — a single-table stress corpus should not pay
     // for 10M scaled event rows it never reads
     require(args.length >= 3,
       "usage: ScaleUp <srcDir> <dstDir> <factor> [tables] [novelPct]")
@@ -44,14 +42,10 @@ object ScaleUp {
     val scaleOnly: Seq[String] =
       if (args.length > 3) args(3).split(",").toSeq else Big
     // optional 5th arg (VERDICT r15 #8): percentage (0..100) of replica
-    // embedding VECTORS rewritten to a decorrelated hash-random direction
-    // instead of the ±0.05 offset. The offset perturbation keeps every
-    // replica above the 0.45 cosine near-dup bar BY CONSTRUCTION, so q67's
-    // growth rows on offset-only corpora measure the k² true-near-dup
-    // candidate mass of the replication itself, not routing cost; with a
-    // novel fraction, that share of batch vectors is genuinely below the
-    // bar and the monitor's growth row measures what it measures in
-    // production — band-routing over a drifting batch.
+    // embedding VECTORS given a decorrelated hash-random direction instead
+    // of the ±0.05 offset, which keeps every replica above the 0.45 cosine
+    // near-dup bar by construction; a novel share makes q67's growth rows
+    // measure band-routing over a drifting batch, not replication mass.
     val novelPct = if (args.length > 4) args(4).toInt else 0
     require(novelPct >= 0 && novelPct <= 100,
       s"novelPct must be 0..100, got $novelPct")
@@ -63,10 +57,25 @@ object ScaleUp {
         s"scalable tables are ${Big.mkString(",")}")
     require(factor >= 1 && factor <= 100, s"factor must be 1..100, got $factor")
     val spark = graft.GraftSession.get()
-    Files.createDirectories(Paths.get(dst))
-    for (t <- graft.sources.Tables.names if !Big.contains(t) || !scaleOnly.contains(t))
-      Files.copy(Paths.get(s"$src/$t.parquet"), Paths.get(s"$dst/$t.parquet"),
-        StandardCopyOption.REPLACE_EXISTING)
+    try run(spark, src, dst, factor, scaleOnly, novelPct)
+    finally spark.stop()
+  }
+
+  /** Write `dst` from `src`: the `scaleOnly` tables as `factor` replicas,
+    * every other table copied through Hadoop's FileSystem (so a directory
+    * table, e.g. any ScaleUp output, copies whole). Leaves the session up. */
+  private[graft] def run(spark: SparkSession, src: String, dst: String, factor: Int,
+                         scaleOnly: Seq[String], novelPct: Int = 0): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    def qualified(d: String) = { val p = new Path(d); p.getFileSystem(conf).makeQualified(p) }
+    // each copy replaces its target first, so a shared dir would lose tables
+    require(qualified(src) != qualified(dst), s"dstDir must differ from srcDir $src")
+    for (t <- graft.sources.Tables.names if !scaleOnly.contains(t)) {
+      val (from, to) = (new Path(s"$src/$t.parquet"), new Path(s"$dst/$t.parquet"))
+      val (fromFs, toFs) = (from.getFileSystem(conf), to.getFileSystem(conf))
+      toFs.delete(to, true)
+      require(FileUtil.copy(fromFs, from, toFs, to, false, conf), s"copy of $from failed")
+    }
     for (t <- Big if scaleOnly.contains(t)) {
       val base = spark.read.parquet(s"$src/$t.parquet")
       val reps = (0 until factor).map(k => replica(t, base, k, novelPct))
@@ -74,7 +83,6 @@ object ScaleUp {
         .write.mode("overwrite").parquet(s"$dst/$t.parquet")
       println(s"[scaleup] $t ×$factor")
     }
-    spark.stop()
   }
 
   /** Replica k of table `t`; k = 0 is the identity. `novelPct` applies to
@@ -93,14 +101,11 @@ object ScaleUp {
           .withColumn("user_id", col("user_id") + kc * 10000000L)
       case "documents" =>
         // rotate consonants by k mod 20 AND vowels by k div 20: same
-        // lengths, same token boundaries, different shingles → replicas are
-        // NOT near-dups of each other, so the corpus dup-rate scales instead
-        // of deepening. The second (vowel) rotation matters: consonant
-        // rotation alone is the IDENTITY at k % 20 == 0, so factors > 20
-        // would byte-copy texts across replicas 20 apart — exactly the
-        // accidental dup-deepening this perturbation exists to prevent. The
-        // pair (k % 20, k / 20) is distinct for every k in 0..99 (factor
-        // cap is 100), so no two replicas share a transform.
+        // lengths and token boundaries, different shingles, so replicas are
+        // NOT near-dups of each other and the dup-rate scales instead of
+        // deepening. Consonant rotation alone is the identity at k % 20 == 0;
+        // the pair (k % 20, k / 20) is distinct for every k below the
+        // factor cap of 100, so no two replicas share a transform.
         val abc = "bcdfghjklmnpqrstvwxz"
         val vow = "aeiou"
         val rc = abc.drop(k % abc.length) + abc.take(k % abc.length)

@@ -242,4 +242,25 @@ class BenchTripwireSpec extends AnyFunSuite {
     assert(rows("qa") === Map("ms" -> 1200L, "shuffle_write_b" -> 7L))
     assert(rows("qb") === Map("ms" -> 400L, "shuffle_write_b" -> 9L))
   }
+
+  test("inline bench-line membership ranks by the reference, so swapped times near the cut keep the set") {
+    val ref = Map("q01" -> 5.0, "q02" -> 4.0, "q03" -> 3.0, "q04" -> 2.0)
+    val keys = Seq("q01", "q02", "q03", "q04", "q05")
+    val runA = Map("q01" -> 5.0, "q02" -> 4.0, "q03" -> 2.9, "q04" -> 3.1, "q05" -> 0.1)
+    val runB = runA ++ Map("q03" -> 3.1, "q04" -> 2.9)
+    // ranking by this run's own times would swap q03/q04 across a cut of 3
+    assert(keys.sortBy(k => -runA(k)).take(3).toSet !== keys.sortBy(k => -runB(k)).take(3).toSet)
+    val cutA = Bench.slowestFirst(keys, runA, ref).take(3)
+    assert(cutA.toSet === Set("q01", "q02", "q03"))
+    assert(Bench.slowestFirst(keys, runB, ref).take(3).toSet === cutA.toSet)
+    // a key with no reference row ranks by this run's figure
+    assert(Bench.slowestFirst(keys, runA ++ Map("q05" -> 4.5), ref).take(2) === Seq("q01", "q05"))
+  }
+
+  test("measure rows carry every named column, input bytes appended last") {
+    assert(Bench.cols.take(14) === Seq("ms", "shuffle_write_b", "shuffle_read_b",
+      "spill_mem_b", "spill_disk_b", "task_gc_ms", "task_run_ms", "tasks",
+      "task_cpu_ms", "driver_gc_ms", "proc_cpu_ms", "load_x100", "jit_ms", "janino_compiles"))
+    assert(Bench.cols.last === "input_b")
+  }
 }

@@ -192,4 +192,18 @@ class ScaleOpsSpec extends SparkSpec {
       graft.tools.ScaleUp.main(Array("/nonexistent/src", "/nonexistent/dst", "2", "")))
     assert(e2.getMessage.contains("unknown table"), e2.getMessage)
   }
+
+  test("ScaleUp copies Spark-written table directories whole when re-scaling its own output") {
+    // dir A's events is a Spark-written directory; scaling A's documents
+    // into B must copy that directory with its files, not as an empty dir
+    val a = TempDirs.create("graft_scaleup_a_")
+    val b = TempDirs.create("graft_scaleup_b_")
+    graft.tools.ScaleUp.run(spark, sf, a, 2, Seq("events"))
+    graft.tools.ScaleUp.run(spark, a, b, 2, Seq("documents"))
+    val aEvents = spark.read.parquet(s"$a/events.parquet").count()
+    assert(aEvents === 2 * spark.read.parquet(s"$sf/events.parquet").count())
+    assert(spark.read.parquet(s"$b/events.parquet").count() === aEvents)
+    assert(spark.read.parquet(s"$b/documents.parquet").count() ===
+      2 * spark.read.parquet(s"$a/documents.parquet").count())
+  }
 }
