@@ -17,20 +17,24 @@ final class TaskMetricsListener extends SparkListener {
   // cpu at constant bytes/spill/GC means the task threads were descheduled
   // (host CPU contention), the one cause wall time alone can never prove.
   private[this] val c = Array.fill(9)(new AtomicLong)
-  // job id -> (start time, description) while running; (id, wall ms,
-  // description) once ended, until taken
-  private[this] val running = new ConcurrentHashMap[Int, (Long, String)]()
-  private[this] val ended = new ConcurrentLinkedQueue[(Int, Long, String)]()
+  // job id -> (start time, job with wall ms 0) while running; the job with
+  // its wall ms once ended, until taken
+  private[this] val running = new ConcurrentHashMap[Int, (Long, TaskMetricsListener.Job)]()
+  private[this] val ended = new ConcurrentLinkedQueue[TaskMetricsListener.Job]()
   override def onJobStart(e: SparkListenerJobStart): Unit = {
+    val prop = (k: String) => Option(e.properties).flatMap(p => Option(p.getProperty(k)))
     // the job's description if one was set, else its call site (the name
-    // of its final stage, e.g. "save at Profile.scala:120")
-    val desc = Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+    // of its final stage, e.g. "save at Profile.scala:120"); AQE's stage
+    // jobs have neither a description nor a telling call site, but carry
+    // their query's SQL execution id like every job an action starts
+    val desc = prop("spark.job.description")
       .orElse(e.stageInfos.maxByOption(_.stageId).map(_.name)).getOrElse("")
-    running.put(e.jobId, (e.time, desc))
+    val exec = prop("spark.sql.execution.id").flatMap(_.toLongOption)
+    running.put(e.jobId, (e.time, TaskMetricsListener.Job(e.jobId, 0L, desc, exec)))
     jobsStarted.incrementAndGet(); ()
   }
   override def onJobEnd(e: SparkListenerJobEnd): Unit = {
-    Option(running.remove(e.jobId)).foreach { case (t0, d) => ended.add((e.jobId, e.time - t0, d)) }
+    Option(running.remove(e.jobId)).foreach { case (t0, j) => ended.add(j.copy(ms = e.time - t0)) }
     jobsEnded.incrementAndGet(); ()
   }
   override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
@@ -58,9 +62,15 @@ final class TaskMetricsListener extends SparkListener {
     Thread.sleep(60)
   }
   def snapshot(): Array[Long] = c.map(_.get)
-  /** The jobs ended since the last call: (job id, wall ms, description). */
-  def takeJobs(): Seq[(Int, Long, String)] =
+  /** The jobs ended since the last call. */
+  def takeJobs(): Seq[TaskMetricsListener.Job] =
     Iterator.continually(ended.poll()).takeWhile(_ != null).toSeq
+}
+
+object TaskMetricsListener {
+  /** One ended job: id, wall ms, description (else call site) and the SQL
+    * execution id of the query that ran it, if any. */
+  final case class Job(id: Int, ms: Long, desc: String, execId: Option[Long])
 }
 
 /** Benchmark main: runs every SparkEntry query three times on
@@ -92,8 +102,8 @@ object Bench {
     "janino_compiles", "input_b")
 
   /** One timed action: its row (named by [[cols]]) and the Spark jobs that
-    * ended inside it as (job id, wall ms, description). */
-  private[graft] final case class Measurement(row: Array[Long], jobs: Seq[(Int, Long, String)])
+    * ended inside it. */
+  private[graft] final case class Measurement(row: Array[Long], jobs: Seq[TaskMetricsListener.Job])
 
   private val gcBeans = java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
   private def driverGcMs(): Long = {

@@ -117,7 +117,10 @@ object TextHash {
   def sqlHash60(c: String): String =
     s"concat('0x', substring(md5($c), 1, 15))::BIGINT"
 
-  /** Hash every element of a string array. */
+  /** Hash every element of a string array.
+    *
+    * No engine query calls this Column form ([[DocSignature]] computes
+    * it); `DocSignatureSpec` and the perfbench `functions.*` probes do. */
   def hashArray(arr: Column): Column = transform(arr, hash32(_))
 
   /** Engine-only fast path: xxhash64 folded into the same [0, 2^32) domain,
@@ -136,7 +139,10 @@ object TextHash {
   // -----------------------------------------------------------------------
 
   /** k-slot MinHash signature over hashed shingles: slot s =
-    * min over h of (A_s*h + B_s) mod Mod. */
+    * min over h of (A_s*h + B_s) mod Mod.
+    *
+    * No engine query calls this Column form ([[DocSignature]] computes
+    * it); `DocSignatureSpec` and the perfbench `functions.*` probes do. */
   def minhashSig(hashes: Column, k: Int = MinhashK): Column =
     array((0 until k).map { s =>
       array_min(transform(hashes, h => (h * permA(s) + permB(s)) % Mod))
@@ -191,7 +197,10 @@ object TextHash {
   /** 16-bit SimHash over hashed tokens: output bit b is set iff the +1/-1
     * vote over tokens for bit b of the token hash sums positive. Bit test is
     * pure modular arithmetic (h % 2^(b+1) >= 2^b) so both engines agree
-    * without shift operators. */
+    * without shift operators.
+    *
+    * No engine query calls this Column form ([[DocSignature]] computes
+    * it); `DocSignatureSpec` and the perfbench `functions.*` probes do. */
   def simhash16(hashes: Column): Column =
     (0 until 16)
       .map { b =>

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.functions.DocSignature
 import graft.functions.TextHash._
 import graft.sources.Tables
 import graft.streaming.StreamRunner
@@ -23,64 +24,45 @@ import org.apache.spark.sql.functions._
   */
 object DedupQueries {
 
-  /** Combined per-doc signature frame: distinct shingle-hash set, MinHash
-    * signature, ordered token hashes, and SimHash — ONE aggregation pass.
+  /** Combined per-doc signature frame: distinct shingle-hash set (`shash`,
+    * sorted), MinHash signature (`sig`), ordered token hashes (`thash`)
+    * and SimHash (`simhash`) — one [[graft.functions.DocSignature]] call
+    * per document.
     *
-    * Formulated as explode → codegen'd hash + codegen'd conditional
-    * aggregates → reassemble, NOT as per-row higher-order lambdas: HOFs
-    * evaluate interpreted (~10× slower here), while this shape keeps
-    * md5/conv and the permutation arithmetic inside whole-stage codegen and
-    * compresses the exploded rows back down with map-side partial
-    * aggregation before the (tiny) shuffle on doc_id — the shape that stays
-    * linear at 100 TB. The shingle and token streams are exploded in
-    * separate codegen'd branches, unioned with a `kind` marker, and
-    * aggregated once: every downstream consumer (q23, q23b, q23e) reads one
-    * materialized signature table, with parquet column pruning dropping the
-    * columns a consumer doesn't need. Null-skipping aggregates (`min`,
-    * `collect_set/list`, `sum`) make the conditional per-kind aggregation
-    * exact.
+    * Shape: one `documents` scan and a narrow projection, whole-stage
+    * codegen'd; no Generate, no union, no aggregate and no shuffle (the
+    * only exchange in the materialized build is
+    * [[Materialize.spreadOnWrite]]'s repartition; `PlanSpec` pins it).
+    * The kernel computes the same values the [[graft.functions.TextHash]]
+    * Column primitives compose to (`DocSignatureSpec`), and those are
+    * what the DuckDB oracle CTEs ([[sqlSigCtes]]) replay. Composing the
+    * primitives here instead meant either higher-order lambdas (evaluated
+    * interpreted, per element) or exploding every token and shingle into
+    * its own row and rebuilding the four columns with 34 aggregates
+    * behind a shuffle — `collect_set`/`collect_list` forced a non-codegen
+    * ObjectHashAggregate, and the build scanned `documents` twice. Every
+    * consumer (the q23 family, q29c, q49, q65, …) reads the one
+    * materialized table, with parquet column pruning dropping the columns
+    * it does not need.
     *
     * Tiny-doc contract (pinned by `DedupEdgeSpec`): a doc with fewer tokens
-    * than the shingle width still yields exactly one (shorter) shingle —
-    * `shingles` floors its sequence length at 1 and `concat_ws` skips the
-    * NULLs `try_element_at` returns past the end — and an empty/whitespace
-    * text tokenizes to one empty-string token in BOTH engines (Spark
-    * `split(trim(s),"\\s+")` and DuckDB `regexp_split_to_array` each return
-    * `[""]`), so `shash` is never empty and the minhash slots are never
-    * null for any non-null text. A NULL text drops out of both exploded
-    * branches and therefore out of the signature table entirely (testdata
-    * has none; the oracle CTEs would keep a NULL-signature row, so null
-    * text is outside the parity contract). */
+    * than the shingle width still yields exactly one (shorter) shingle, and
+    * an empty/whitespace text tokenizes to one empty-string token in BOTH
+    * engines (Spark `split(trim(s),"\\s+")` and DuckDB
+    * `regexp_split_to_array` each return `[""]`), so `shash` is never
+    * empty and the minhash slots are never null for any non-null text. A
+    * NULL text is filtered out of the signature table (testdata has none;
+    * the oracle CTEs would keep a NULL-signature row, so null text is
+    * outside the parity contract). */
   private[graft] def sigTokFrame(s: SparkSession, dir: String): DataFrame = {
-    // tokens bound to an attribute BEFORE shingling: a lambda body
-    // re-evaluates its argument expression per array element, so passing the
-    // raw split() into shingles() would re-run the regex split 3× per
-    // shingle (CollapseProject keeps the binding because it is multi-use)
-    val base = Tables.documents(s, dir)
-      .select(col("doc_id"), tokens(col("text")).as("toks"))
-    val sh = base
-      .select(col("doc_id"), explode(shingles(col("toks"))).as("v"))
-      .select(col("doc_id"), lit(0).as("kind"), lit(-1).as("p"), hash32(col("v")).as("h"))
-    val tk = base
-      .select(col("doc_id"), posexplode(col("toks")).as(Seq("p", "tok")))
-      .select(col("doc_id"), lit(1).as("kind"), col("p"), hash32(col("tok")).as("h"))
-    val isSh = col("kind") === 0
-    val mins = (0 until MinhashK).map(i =>
-      min(when(isSh, (col("h") * permA(i) + permB(i)) % Mod)).as(s"m$i"))
-    val votes = (0 until 16).map { b =>
-      val p = 1L << b
-      sum(when(!isSh, when(col("h") % (2 * p) >= p, 1L).otherwise(-1L))).as(s"v$b")
-    }
-    val ph = array_sort(
-      collect_list(when(!isSh, struct(col("p"), col("h"))))).as("ph")
-    sh.unionByName(tk)
-      .groupBy(col("doc_id"))
-      .agg(collect_set(when(isSh, col("h"))).as("shash"), (mins ++ votes :+ ph): _*)
-      .select(
-        col("doc_id"), col("shash"),
-        array((0 until MinhashK).map(i => col(s"m$i")): _*).as("sig"),
-        transform(col("ph"), x => x.getField("h")).as("thash"),
-        simhashFromVotes((0 until 16).map(b => col(s"v$b"))).as("simhash"))
+    DocSignature.register(s)
+    // the struct is bound once: its four field reads are not collapsed
+    // into four kernel calls (CollapseProject keeps a multi-use, non-cheap
+    // producer in its own projection)
+    Tables.documents(s, dir)
+      .filter(col("text").isNotNull)
+      .select(col("doc_id"), DocSignature.of(col("text")).as("d"))
+      .select(col("doc_id"), col("d.shash"), col("d.sig"), col("d.thash"), col("d.simhash"))
   }
 
   /** The shared materialized signature table (one compute per session+dir). */
@@ -90,11 +72,6 @@ object DedupQueries {
     // scanned it — and ran its band/shingle explodes — on one task
     Materialize.spreadOnWrite(s, dir, "sigtok", col("doc_id"))(
       sigTokFrame(s, dir))
-
-  private def simhashFromVotes: Seq[Column] => Column = vs =>
-    vs.zipWithIndex
-      .map { case (v, b) => when(v > 0, lit(1L << b)).otherwise(lit(0L)) }
-      .reduce(_ + _)
 
   private val sqlSigCtes =
     s"""src AS (SELECT doc_id, ${sqlTokens("text")} AS toks FROM documents),
@@ -1648,16 +1625,15 @@ object DedupQueries {
     // MinHash-banded PER EVENT and probed against the FROZEN corpus band
     // index — the incremental-ingest shape of LSH dedup (new data vs an
     // existing signature index), where q23b is the batch backfill over the
-    // whole corpus. Per-event signatures use the higher-order-function form
-    // (no aggregation state on the stream; the HOF-vs-explode trade
-    // documented on sigTokFrame flips for per-record gating), the index
-    // probe is a stream-static equi-join on the band key, and the only
-    // stateful operator is one update-mode count — bounded by docs in
-    // flight. At 100 TB the index is the bucketed band table this join
-    // co-locates with; the gate's n_band_matches is collision multiplicity
-    // (each shared (band, index entry) counts once), deliberately BEFORE
-    // the exact-Jaccard confirm so the stream stays one narrow pass — the
-    // confirm is q23b's batch job over the flagged slice.
+    // whole corpus. Per-event signatures are the DocSignature kernel's `sig`
+    // (the per-row call sigTokFrame makes; no aggregation state on the
+    // stream), the index probe is a stream-static equi-join on the band
+    // key, and the only stateful operator is one update-mode count —
+    // bounded by docs in flight. At 100 TB the index is the bucketed band
+    // table this join co-locates with; the gate's n_band_matches is
+    // collision multiplicity (each shared (band, index entry) counts once),
+    // deliberately BEFORE the exact-Jaccard confirm so the stream stays one
+    // narrow pass — the confirm is q23b's batch job over the flagged slice.
     QueryDef(
       "q29c_stream_neardup_gate",
       s"""WITH $sqlSigCtes,
@@ -2545,8 +2521,9 @@ object DedupQueries {
     * by the query (parquet replay of the documents table) and
     * StreamingSpec's bounded-state pin (a MemoryStream long replay).
     *
-    * Shingle hashes are bound to an attribute before the k permutation
-    * lambdas iterate them (the one-split-per-row rule); the index probe is
+    * Each event's MinHash signature is the `sig` field of one
+    * [[graft.functions.DocSignature]] call (the value the signature
+    * table's rows carry, so event and index bands agree); the index probe is
     * a stream-static equi-join on the band key; the only stateful operator
     * is one update-mode count. That count's state is NOT left to grow with
     * the corpus (VERDICT r9 #4 — the eviction is now CONFIGURED, not
@@ -2580,11 +2557,9 @@ object DedupQueries {
       sigTable(s, dir).select(
         col("doc_id").as("idx_doc"),
         posexplode(lshBandKeys(col("sig"))).as(Seq("j", "bk"))))
+    DocSignature.register(s)
     val ev = docs
-      .select(col("doc_id"), tokens(col("text")).as("toks"))
-      .select(col("doc_id"),
-        array_distinct(transform(shingles(col("toks")), v => hash32(v))).as("shash"))
-      .select(col("doc_id"), minhashSig(col("shash")).as("sig"))
+      .select(col("doc_id"), DocSignature.of(col("text")).getField("sig").as("sig"))
       .select(col("doc_id"), posexplode(lshBandKeys(col("sig"))).as(Seq("sj", "sbk")))
       .withColumn("dts", timestamp_seconds(lit(1704067200L) + col("doc_id")))
       .withWatermark("dts", GateWatermark)

@@ -81,14 +81,18 @@ object Materialize {
     * once per (session, tag) — in the build, never in a serving read. */
   def spreadOnWrite(s: SparkSession, srcDir: String, tag: String,
                     key: org.apache.spark.sql.Column)(df: => DataFrame): DataFrame =
-    write(s, srcDir, tag, Nil) {
-      val d = df
-      val target = s.sparkContext.defaultParallelism.toLong
-      val advisory = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-        s.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m"))
-      if (dirBytes(srcDir) >= advisory * target) d
-      else d.repartition(target.toInt, key)
-    }
+    write(s, srcDir, tag, Nil)(spread(s, srcDir, key)(df))
+
+  /** The frame [[spreadOnWrite]] writes: `df`, rebalanced on `key` when the
+    * gate above fires. */
+  private[graft] def spread(s: SparkSession, srcDir: String,
+                            key: org.apache.spark.sql.Column)(df: DataFrame): DataFrame = {
+    val target = s.sparkContext.defaultParallelism.toLong
+    val advisory = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+      s.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m"))
+    if (dirBytes(srcDir) >= advisory * target) df
+    else df.repartition(target.toInt, key)
+  }
 
   /** Total regular-file bytes under a dir, cached per dir — one stat walk,
     * no job; the scale signal [[spreadOnWrite]]'s gate reads. */

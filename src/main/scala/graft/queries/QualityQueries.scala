@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   *
   * Scale design: the quality rules are the only query with a shuffle (two,
   * both keyed on doc_id-dominated composites with map-side partial
-  * aggregation — the sigTokFrame shape); redaction and split assignment are
+  * aggregation); redaction and split assignment are
   * pure per-row projections that ride the scan at any scale.
   */
 object QualityQueries {
@@ -156,9 +156,10 @@ object QualityQueries {
     // quality scoring. Shape: one exploded union of token and bigram
     // streams → ONE (doc_id, kind, value) counting aggregation (map-side
     // partials compress the exploded rows before the shuffle) → one per-doc
-    // aggregation. Both shuffles are linear in corpus token count — the
-    // sigTokFrame recipe, so the pass scales exactly like signature
-    // computation does.
+    // aggregation. Both shuffles are linear in corpus token count. (The
+    // signature table left this explode-and-aggregate shape for a per-row
+    // kernel, DocSignature; these counts are per (doc, value), which a
+    // per-row kernel does not produce.)
     QueryDef(
       "q25h_quality_rules",
       s"""WITH $sqlQualityMCtes

@@ -401,8 +401,9 @@ object TextAnalysisQueries {
          |FROM ranked WHERE rk <= 3 AND c_ctx >= 100
          |ORDER BY w1, rk""".stripMargin) { (s, dir) =>
       import org.apache.spark.sql.expressions.Window
-      // tokens bound to an attribute first (sigTokFrame note: one split per
-      // row, not one per consuming expression)
+      // tokens bound to an attribute first: a lambda or slice re-evaluates
+      // its argument per use, so this keeps one split per row, not one per
+      // consuming expression (the TextHash.shingles PERF note)
       val t = col("toks")
       val bg = Tables.documents(s, dir)
         .select(tokens(col("text")).as("toks"))

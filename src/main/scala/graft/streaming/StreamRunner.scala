@@ -26,6 +26,11 @@ object StreamRunner {
   private def tempDir(tag: String): String =
     graft.TempDirs.create(s"graft_${tag}_${n.incrementAndGet()}_")
 
+  /** A started stream's name: its tag, so progress events (Profile's
+    * `batches`) say which stream they belong to, plus the counter, because
+    * active queries must have distinct names. */
+  private def queryName(tag: String): String = s"${tag}_${n.incrementAndGet()}"
+
   /** Replay-source dirs, shared across queries: several streaming queries
     * replay the same bounded table, so the materialization is written once
     * per (session, source, shape) and re-read by every query (each query
@@ -380,6 +385,7 @@ object StreamRunner {
                  f: (DataFrame, Long) => Unit): Unit =
     withStateParts(spark, flush) {
       val q = sdf.writeStream
+        .queryName(queryName(tag))
         .foreachBatch(f)
         .option("checkpointLocation", checkpoint.getOrElse(tempDir(s"chk_$tag")))
         .trigger(Trigger.AvailableNow())
@@ -475,6 +481,7 @@ object StreamRunner {
     @volatile var current: Option[String] = None
     withStateParts(spark, flush) {
       val q = sdf.writeStream
+        .queryName(queryName(tag))
         .outputMode("update")
         .foreachBatch { (batch: DataFrame, id: Long) =>
           val ss = batch.sparkSession
@@ -511,6 +518,7 @@ object StreamRunner {
     val out = tempDir(s"sink_$tag")
     withStateParts(spark, flush) {
       val q = sdf.writeStream
+        .queryName(queryName(tag))
         .format("parquet")
         .option("path", out)
         .option("checkpointLocation", checkpoint.getOrElse(tempDir(s"chk_$tag")))
@@ -545,6 +553,7 @@ object StreamRunner {
     var nonEmpty = 0
     withStateParts(spark, flush = false) {
       val q = sdf.writeStream
+        .queryName(queryName(tag))
         .format("parquet")
         .option("path", out)
         .option("checkpointLocation", checkpoint.getOrElse(tempDir(s"chk_$tag")))

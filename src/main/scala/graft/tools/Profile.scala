@@ -23,9 +23,10 @@ import graft.queries.{DedupQueries, SimilarityQueries}
   * from-scratch re-encode). Each (target, pass) is one [[Bench.measure]] of
   * building the frames and noop-writing them, printed as a JSON line:
   * `build_ms` (the building call: eager materializations, stream replays),
-  * Bench's row by column name, `jobs` ([id, ms, description]), `batches`
-  * (per micro-batch: `durationMs`, input rows, state operators), `outside_s`
-  * (wall outside every `triggerExecution`), `state_dir_b` (bytes of the
+  * Bench's row by column name, `jobs` ([id, ms, description, SQL execution
+  * id or null]), `batches` (per micro-batch: stream name, `durationMs`,
+  * input rows, state operators), `outside_s` (wall outside every
+  * `triggerExecution`), `state_dir_b` (bytes of the
   * newest scratch state dirs, q45b/q45c; -1 if none). `planDir` gets each
   * target's plans as `<short>.txt`. */
 object Profile {
@@ -96,7 +97,8 @@ object Profile {
     val trigger = ps.map(_.durationMs.asScala.get("triggerExecution").fold(0L)(_.longValue)).sum
     obj(Seq("target" -> str(t.name), "pass" -> pass, "build_ms" -> buildMs) ++
       Bench.cols.zip(m.row) ++ Seq(
-        "jobs" -> m.jobs.map { case (id, ms, d) => s"[$id,$ms,${str(d)}]" }.mkString("[", ",", "]"),
+        "jobs" -> m.jobs.map(j => s"[${j.id},${j.ms},${str(j.desc)},${j.execId.getOrElse("null")}]")
+          .mkString("[", ",", "]"),
         "batches" -> batches.mkString("[", ",", "]"), "outside_s" -> (m.row(0) - trigger) / 1000.0,
         "state_dir_b" -> stateDirBytes(t.short)))
   }

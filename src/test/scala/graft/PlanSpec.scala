@@ -704,4 +704,27 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("graft_q24d_sig_"), p)
     assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"), p)
   }
+
+  test("sigtok build: one documents scan, a narrow kernel projection, only the spread exchange") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+    import graft.queries.{DedupQueries, Materialize}
+    val build = Materialize.spread(spark, sf, col("doc_id"))(DedupQueries.sigTokFrame(spark, sf))
+    val p = build.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.inputPlan
+      case p => p
+    }
+    val scans = p.collect { case f: FileSourceScanExec => f }
+    assert(scans.size === 1 &&
+      scans.head.relation.location.rootPaths.forall(_.toString.contains("documents.parquet")), p)
+    assert(p.collect { case g: GenerateExec => g }.isEmpty, p)
+    // no aggregate of any kind: ObjectHashAggregate, SortAggregate, HashAggregate
+    assert(p.collect { case a: BaseAggregateExec => a }.isEmpty, p)
+    val exchanges = p.collect { case e: ShuffleExchangeExec => e }
+    assert(exchanges.map(_.shuffleOrigin) === Seq(REPARTITION_BY_NUM), p)
+    // the kernel runs once per row: its four fields read one bound struct
+    assert("doc_signature\\(".r.findAllIn(p.toString).size === 1, p)
+  }
 }

@@ -37,6 +37,24 @@ class ProfileSpec extends SparkSpec {
     q20.foreach { l =>
       val batches = l.substring(l.indexOf(""""batches":["""))
       assert(batches.contains(""""addBatch":""") && batches.contains(""""triggerExecution":"""), l)
+      val names = """"query":"([^"]*)"""".r.findAllMatchIn(batches).map(_.group(1)).toSeq
+      assert(names.nonEmpty && names.forall(_.startsWith("q20")), names)
+    }
+  }
+
+  test("every q10 job, AQE stage jobs included, carries its SQL execution id") {
+    // building the frame once first runs the session's one-time parquet
+    // schema inferences (Tables' cache), the only jobs that belong to no
+    // SQL execution and so print a null id
+    SparkEntry.queries("q10_region_revenue")(spark, sf)
+    val lines = profile(Seq("q10_region_revenue"), 2)
+    assert(lines.size === 2)
+    lines.foreach { l =>
+      val jobs = l.substring(l.indexOf(""""jobs":["""), l.indexOf(""""batches":"""))
+      val exec = """\[[0-9]+,[0-9]+,"(?:[^"\\]|\\.)*",([0-9]+|null)\]""".r
+        .findAllMatchIn(jobs).map(_.group(1)).toSeq
+      assert(exec.size === """\[[0-9]+,[0-9]+,"""".r.findAllMatchIn(jobs).size, jobs)
+      assert(exec.nonEmpty && !exec.contains("null"), jobs)
     }
   }
 
