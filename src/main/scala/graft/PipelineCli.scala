@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.{EcommerceOps, EcommercePipelines}
-import graft.sources.Ecommerce
+import graft.sources.{Ecommerce, Footers}
 import graft.streaming.{Channels, StreamRunner}
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -60,7 +60,7 @@ object BatchPipelineCli {
     // receipt) read the parquet sink back when one was written, else a
     // cached frame — re-executing the lazy plan would re-mint record_ids
     // (monotonically_increasing_id is layout-dependent) and re-scan the CSV
-    val result = kv.get("output").map(spark.read.parquet)
+    val result = kv.get("output").map(Footers.read(spark, _))
       .getOrElse(if (kv.contains("jdbcUrl")) out.cache() else out)
     for (url <- kv.get("jdbcUrl"))
       EcommercePipelines.writeOltp(result, url, kv.getOrElse("table", "user_sessions"))
@@ -198,6 +198,6 @@ object ReplayPipelineCli {
       else f"span ${span / 3600.0}%.1f h, speedFactor $speed" +
         (if (wallclock) s", wall-clock $minuteMs ms/min" else "")
     println(s"[replay] $nBatches micro-batches ($pacing); " +
-      s"wrote ${spark.read.parquet(output).count()} rows to $output")
+      s"wrote ${Footers.rowCount(spark, output)} rows to $output")
   }
 }

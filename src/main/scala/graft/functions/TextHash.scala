@@ -84,14 +84,9 @@ object TextHash {
       s"i -> concat_ws(' ', $parts))"
   }
 
-  /** Character n-grams of the raw text; `stride` > 1 gives the w-shingling
-    * variant (overlapping windows every `stride` chars — ~1/stride the
-    * grams with near-identical pair discrimination). */
-  def charGrams(text: Column, n: Int = CharGramN, stride: Int = 1): Column =
-    transform(
-      sequence(lit(1), greatest(length(text) - (n - 1), lit(1)), lit(stride)),
-      i => text.substr(i, lit(n)))
-
+  /** Character n-grams of the raw text, as DuckDB SQL; `stride` > 1 gives
+    * the w-shingling variant (overlapping windows every `stride` chars —
+    * ~1/stride the grams with near-identical pair discrimination). */
   def sqlCharGrams(text: String, n: Int = CharGramN, stride: Int = 1): String =
     s"list_transform(generate_series(1, greatest(length($text)-${n - 1}, 1), $stride), " +
       s"i -> substring($text, i, $n))"
@@ -122,14 +117,6 @@ object TextHash {
     * No engine query calls this Column form ([[DocSignature]] computes
     * it); `DocSignatureSpec` and the perfbench `functions.*` probes do. */
   def hashArray(arr: Column): Column = transform(arr, hash32(_))
-
-  /** Engine-only fast path: xxhash64 folded into the same [0, 2^32) domain,
-    * ~10× cheaper per value than md5. Drop-in for [[hash32]] wherever DuckDB
-    * oracle parity is not required (DuckDB has no xxhash64) — the production
-    * configuration at 100 TB; the md5 path exists for cross-engine
-    * verification. All downstream arithmetic (MinHash perms, SimHash votes,
-    * LSH bands, fingerprints) is domain-compatible with both. */
-  def hash32Fast(c: Column): Column = pmod(xxhash64(c), lit(1L << 32))
 
   def sqlHashArray(arr: String): String =
     s"list_transform($arr, v -> ${sqlHash32("v")})"

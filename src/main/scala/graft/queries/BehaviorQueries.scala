@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.sources.Tables
+import graft.sources.{Footers, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -269,7 +269,7 @@ object BehaviorQueries {
     * (sf0.001: 15 users over ≤15 written buckets) still leaves most
     * buckets untouched. */
   private[graft] def scdDeltaMod(s: SparkSession, dir: String): Long = {
-    val n = Tables.parquetRowCount(s, s"$dir/events.parquet")
+    val n = Footers.rowCount(s, s"$dir/events.parquet")
     val target = math.max(2L, math.min(20L, n / 500))
     math.max(1L, n / target)
   }

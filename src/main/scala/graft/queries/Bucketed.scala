@@ -19,7 +19,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * The table is EXTERNAL (data under a scratch dir via `option("path")`,
   * metadata in the session's in-memory catalog) so nothing lands in a
   * default warehouse under the repo; written once per (session, tag,
-  * source dir) like Materialize, same check-then-putIfAbsent discipline.
+  * source dir, source listing signature) like Materialize, same
+  * check-then-putIfAbsent discipline.
   */
 object Bucketed {
 
@@ -37,7 +38,8 @@ object Bucketed {
 
   def apply(s: SparkSession, srcDir: String, tag: String, buckets: Int,
             bucketCol: String)(df: => DataFrame): DataFrame = {
-    val key = s"${graft.SessionToken(s)}|$tag|$buckets|$bucketCol|$srcDir"
+    val key = s"${graft.SessionToken(s)}|$tag|$buckets|$bucketCol|$srcDir|" +
+      graft.sources.Footers.listing(s, srcDir).signature
     var name = cache.get(key)
     if (name == null) {
       val tbl = s"graft_${tag}_${nameSeq.incrementAndGet()}"

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.functions.TextHash.{hash32, shingles, sqlHash32, sqlShingles, sqlTokens, tokens}
-import graft.sources.Tables
+import graft.sources.{Footers, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -56,7 +56,7 @@ object CurationPipeline {
 
   private def batchMod(s: SparkSession, dir: String): Long =
     math.max(7L,
-      Tables.parquetRowCount(s, s"$dir/documents.parquet") / BatchTarget)
+      Footers.rowCount(s, s"$dir/documents.parquet") / BatchTarget)
 
   /** The modulus in the oracle's dialect — a 1-row subquery over the
     * identical table, so both engines derive the identical batch. */
@@ -306,7 +306,7 @@ object CurationPipeline {
     // batch rule is ever retuned upward a constant would silently degrade
     // the FPP and balloon the history scan's survivor volume (ADVICE r11)
     val expected = math.max(1000L,
-      2L * (Tables.parquetRowCount(s, s"$dir/documents.parquet") / m))
+      2L * (Footers.rowCount(s, s"$dir/documents.parquet") / m))
     graft.functions.SketchFunctions.register(s)
     val sketch = batch.select(xxhash64(col("k")).as("kh"))
       .agg(graft.functions.SketchFunctions
@@ -460,10 +460,7 @@ object CurationPipeline {
     val tDir = s"$stateRoot/t_v$id"
     val pk = packable(tokenized(spanClean(segsOf(kept), bp)))
     pk.write.mode("overwrite").parquet(tDir)
-    // one-time POST-write inference (ADVICE r16): every slice of every
-    // packSlice caller writes the same packable() shape, so the first
-    // slice's footer job serves all later slices and runs
-    val t = Materialize.pinnedRead(ss, "packslice_t", tDir)
+    val t = Footers.read(ss, tDir)
     packFrom(t, baseNow).write.mode("overwrite").parquet(s"$outRoot/out_v$id")
     val nb = baseNow
       .unionByName(t.groupBy(col("lang")).agg(sum(col("n_tok")).as("base")))

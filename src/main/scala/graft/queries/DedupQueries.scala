@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.functions.DocSignature
 import graft.functions.TextHash._
-import graft.sources.Tables
+import graft.sources.{Footers, Tables}
 import graft.streaming.StreamRunner
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -234,7 +234,7 @@ object DedupQueries {
     * from the identical table. */
   private def recallSampleMod(s: SparkSession, dir: String): Long =
     math.max(1L,
-      Tables.parquetRowCount(s, s"$dir/documents.parquet") / RecallSampleTarget)
+      Footers.rowCount(s, s"$dir/documents.parquet") / RecallSampleTarget)
 
   private val sqlRecallSampleMod: String =
     s"(SELECT GREATEST(COUNT(*) // $RecallSampleTarget, 1) FROM documents)"
@@ -292,8 +292,7 @@ object DedupQueries {
       .withColumn("_lr",
         dense_rank().over(Window.partitionBy(col("_pid")).orderBy(kc: _*)).cast("long"))
     pinned.write.mode("overwrite").parquet(pinDir)
-    // one-time POST-write inference per tag (ADVICE r16), zero jobs after
-    val local = Materialize.pinnedRead(s, s"ddr_$tag", pinDir)
+    val local = Footers.read(s, pinDir)
     val offs = local.groupBy(col("_pid")).agg(max(col("_lr")).as("_cnt"))
       .withColumn("_off",
         coalesce(sum(col("_cnt")).over(
@@ -351,10 +350,7 @@ object DedupQueries {
       def round(df: DataFrame, tag: String): (DataFrame, String) = {
         val d = graft.TempDirs.create(s"graft_${tag}_")
         df.write.mode("overwrite").parquet(d)
-        // one-time POST-write inference per builder (ADVICE r16): every
-        // round writes the same (doc_id, pos, r) shape, so the first
-        // round's footer job serves the rest
-        (Materialize.pinnedRead(s, s"${mTag}_round", d), d)
+        (Footers.read(s, d), d)
       }
       // the superseded round + the pins feeding the round just written are
       // dead the moment the write commits — reclaim them eagerly so the
@@ -502,8 +498,7 @@ object DedupQueries {
         .withColumn("_cb", sum(col("isb")).over(
           w.rowsBetween(Window.unboundedPreceding, 0)))
       pinned.write.mode("overwrite").parquet(pinDir)
-      // one-time POST-write inference per merge tag (ADVICE r16)
-      val loc = Materialize.pinnedRead(s, s"${mTag}_pin", pinDir)
+      val loc = Footers.read(s, pinDir)
       val offs = loc.groupBy(col("_pid"))
         .agg(count(lit(1)).as("_n"), sum(col("isb")).as("_nb"))
         .select(col("_pid"),
@@ -1839,8 +1834,8 @@ object DedupQueries {
       // conf caps. Probed INSIDE the history scan so history is never
       // shuffled wholesale.
       val totalWindows = Materialize.pathFor(s, dir, s"substr_w$SubstrW")
-        .map(Tables.parquetRowCount(s, _))
-        .getOrElse(Tables.parquetRowCount(s, s"$dir/documents.parquet") * 128)
+        .map(Footers.rowCount(s, _))
+        .getOrElse(Footers.rowCount(s, s"$dir/documents.parquet") * 128)
       val expected = math.max(1000L, totalWindows / 7 + 1)
       graft.functions.SketchFunctions.register(s)
       val sketch = bw.select(xxhash64(col("wh")).as("kh"))
@@ -2584,7 +2579,7 @@ object DedupQueries {
     // expected-items bound from the parquet footers — metadata only, no scan
     // job (the sketch build below is the one distributed pass over the batch)
     val expected =
-      math.max(1000L, Tables.parquetRowCount(s, s"$dir/documents.parquet") / 5 + 1)
+      math.max(1000L, Footers.rowCount(s, s"$dir/documents.parquet") / 5 + 1)
     // The sketch stores xxhash64(key) longs — the exact put/probe pairing
     // Spark's own InjectRuntimeFilter emits (BloomFilterAggregate over
     // XxHash64 on the build side, BloomFilterMightContain + XxHash64 on the

@@ -2,6 +2,7 @@ package graft.queries
 
 import java.util.concurrent.ConcurrentHashMap
 
+import graft.sources.Footers
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Cached parquet materialization for reused intermediates (signature
@@ -17,30 +18,24 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * read one signature table; the q24 family shares the normed corpus), and
   * the bench harness runs every query twice — recomputing an identical
   * frame per consumer is pure waste. The key is (session UUID, tag, source
-  * dir) — the UUID via [[graft.SessionToken]], NOT identityHashCode, whose
-  * values are reused after GC and can leak one session's cache entries into
-  * the next. Each tag names one fixed program over an immutable source dir
-  * (the driver testdata is read-only), so the triple identifies the result;
-  * a source dir rewritten mid-session would need a version component here.
-  * (NOT the plan's semanticHash: lambda-bearing plans — `transform`,
-  * `aggregate` — allocate fresh lambda-variable IDs per construction that
-  * canonicalization does not normalize, so their hash changes every call
-  * and silently defeats the cache.) The frame is by-name: a cache hit never
-  * builds the plan at all. Entries live for the session; the scratch dirs
-  * are tracked by [[graft.TempDirs]] and deleted on JVM exit.
+  * dir, the source dir's [[Footers.listing]] signature) — the UUID via
+  * [[graft.SessionToken]], NOT identityHashCode, whose values are reused
+  * after GC and can leak one session's cache entries into the next. Each
+  * tag names one fixed program over its source dir, so the key identifies
+  * the result, and a source dir regenerated mid-session keys a fresh build
+  * instead of serving the old artifact. (NOT the plan's semanticHash:
+  * lambda-bearing plans — `transform`, `aggregate` — allocate fresh
+  * lambda-variable IDs per construction that canonicalization does not
+  * normalize, so their hash changes every call and silently defeats the
+  * cache.) The frame is by-name: a cache hit never builds the plan at all,
+  * and reads the stored dir back through [[Footers.read]] — zero jobs.
+  * Entries live for the session; the scratch dirs are tracked by
+  * [[graft.TempDirs]] and deleted on JVM exit.
   */
 object Materialize {
 
-  /** key → (scratch dir, the dir's parquet schema as read back once).
-    * The schema is cached because `spark.read.parquet(dir)` without one
-    * runs a footer-inference JOB per call — measured round 16 at ~30 ms
-    * each, and an artifact-heavy query (q24m: 17 materialized reads in its
-    * build) paid ~0.5–1 s of pure frame-CONSTRUCTION wall per execution.
-    * With the schema pinned, a cache hit plans straight off the listing —
-    * zero jobs before the action runs (guide §7.3: driver-side work is
-    * where "nothing is running" time hides). */
-  private val cache = new ConcurrentHashMap[String,
-    (String, org.apache.spark.sql.types.StructType)]()
+  /** key → scratch dir. */
+  private val cache = new ConcurrentHashMap[String, String]()
 
   def apply(s: SparkSession, srcDir: String, tag: String)(df: => DataFrame): DataFrame =
     write(s, srcDir, tag, Nil)(df)
@@ -90,57 +85,15 @@ object Materialize {
     val target = s.sparkContext.defaultParallelism.toLong
     val advisory = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
       s.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m"))
-    if (dirBytes(srcDir) >= advisory * target) df
+    if (Footers.listing(s, srcDir).bytes >= advisory * target) df
     else df.repartition(target.toInt, key)
-  }
-
-  /** Total regular-file bytes under a dir, cached per dir — one stat walk,
-    * no job; the scale signal [[spreadOnWrite]]'s gate reads. */
-  private val dirBytesCache = new ConcurrentHashMap[String, java.lang.Long]()
-  private def dirBytes(dir: String): Long =
-    dirBytesCache.computeIfAbsent(dir, d => {
-      try {
-        val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(d))
-        try walk
-          .filter(java.nio.file.Files.isRegularFile(_))
-          .mapToLong(p =>
-            try java.nio.file.Files.size(p) catch { case _: Exception => 0L })
-          .sum()
-        finally walk.close()
-      } catch { case _: Exception => Long.MaxValue } // unknown ⇒ assume big
-    })
-
-  /** (session, pinTag) → post-write inferred schema for the ad-hoc pin
-    * sites (distDenseRank's local-rank pin, the SA builders' per-round
-    * scratch, packSlice's per-slice stage table). See [[pinnedRead]]. */
-  private val pinCache = new ConcurrentHashMap[String,
-    org.apache.spark.sql.types.StructType]()
-
-  /** Re-open a JUST-WRITTEN parquet dir with a one-time POST-write
-    * inferred schema, cached per (session, pinTag) — the same pattern
-    * [[write]] uses for its tags, packaged for the ad-hoc pin sites that
-    * write scratch parquet outside Materialize (ADVICE r16: those sites
-    * pinned the PRE-write frame's schema onto the re-open, and a parquet
-    * round-trip can change schema metadata — nullability, char/varchar
-    * annotations — so the pinned schema could diverge from what was
-    * actually written). The first write under a pinTag pays ONE footer
-    * job; every later re-open under the same pinTag (later rounds of the
-    * same builder, later slices of the same stream, later runs in the
-    * same session) plans with zero jobs. Correct because a pinTag names
-    * ONE fixed program's output shape — rounds/slices/runs of the same
-    * builder write the same schema. */
-  def pinnedRead(s: SparkSession, pinTag: String, dir: String): DataFrame = {
-    val sch = pinCache.computeIfAbsent(
-      s"${graft.SessionToken(s)}|$pinTag",
-      _ => s.read.parquet(dir).schema)
-    s.read.schema(sch).parquet(dir)
   }
 
   /** The scratch dir backing an ALREADY-BUILT unpartitioned tag, if any —
     * for footer-level statistics (row counts) on the stored table without
     * a counting job. None until the tag's first consumer materializes it. */
   def pathFor(s: SparkSession, srcDir: String, tag: String): Option[String] =
-    Option(cache.get(key(s, srcDir, tag, Nil))).map(_._1)
+    Option(cache.get(key(s, srcDir, tag, Nil)))
 
   /** The one cache-key format, shared by [[write]] and [[pathFor]] — a
     * format drift between the two would make pathFor silently always-None
@@ -148,7 +101,8 @@ object Materialize {
     * bounds, ADVICE r14). */
   private def key(s: SparkSession, srcDir: String, tag: String,
                   partCols: Seq[String]): String =
-    s"${graft.SessionToken(s)}|$tag|${partCols.mkString(",")}|$srcDir"
+    s"${graft.SessionToken(s)}|$tag|${partCols.mkString(",")}|$srcDir|" +
+      Footers.listing(s, srcDir).signature
 
   private def write(s: SparkSession, srcDir: String, tag: String,
                     partCols: Seq[String])(df: => DataFrame): DataFrame = {
@@ -160,18 +114,14 @@ object Materialize {
     // IllegalStateException("Recursive update") whenever the two keys land
     // in the same bin. A losing racer just abandons its dir (harness is
     // effectively single-threaded; dirs are reclaimed on exit regardless).
-    var entry = cache.get(key)
-    if (entry == null) {
+    var dir = cache.get(key)
+    if (dir == null) {
       val d = graft.TempDirs.create(s"graft_${tag}_")
       val w = df.write.mode("overwrite")
       (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w).parquet(d)
-      // one inference read (the only footer job this tag ever pays) pins
-      // the WRITTEN schema — including partition-column types discovered
-      // from the directory layout — for every later cache-hit read
-      val made = (d, s.read.parquet(d).schema)
-      val prev = cache.putIfAbsent(key, made)
-      entry = if (prev == null) made else prev
+      val prev = cache.putIfAbsent(key, d)
+      dir = if (prev == null) d else prev
     }
-    s.read.schema(entry._2).parquet(entry._1)
+    Footers.read(s, dir)
   }
 }

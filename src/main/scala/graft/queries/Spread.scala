@@ -56,15 +56,17 @@ object Spread {
       case _ => 0
     }.sum
 
-  /** True when the frame's physical plan contains an Exchange: its
+  /** True when the frame's physical plan contains a shuffle: its
     * post-shuffle parallelism is governed by shuffle partitions / AQE,
-    * not by file splits, so the spread gate does not apply. */
-  private def hasExchange(df: DataFrame): Boolean =
+    * not by file splits, so the spread gate does not apply. A broadcast
+    * exchange does not count — a scan broadcast-joined to a small frame
+    * still runs at its file-split parallelism. */
+  private def hasShuffle(df: DataFrame): Boolean =
     df.queryExecution.sparkPlan.exists(
-      _.isInstanceOf[org.apache.spark.sql.execution.exchange.Exchange])
+      _.isInstanceOf[org.apache.spark.sql.execution.exchange.ShuffleExchangeLike])
 
   /** `df` hash-repartitioned on `key` to the session default parallelism,
-    * iff it is scan-rooted (no Exchange anywhere in the plan — a shuffled
+    * iff it is scan-rooted (no shuffle anywhere in the plan — a shuffled
     * frame's parallelism is already the session's shuffle-partition
     * setting) and its planned scan parallelism is below half of it (see
     * object doc). Values are unchanged for any caller whose results don't
@@ -72,7 +74,7 @@ object Spread {
     * spark_partition_id / unordered limit downstream). */
   def apply(df: DataFrame, key: Column): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
-    if (hasExchange(df)) df
+    if (hasShuffle(df)) df
     else {
       val planned = scanParallelism(df)
       if (planned * 2 >= target) df

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.sources.Tables
+import graft.sources.{Footers, Tables}
 import graft.streaming.StreamRunner
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, TimeMode}
@@ -49,19 +49,11 @@ object StreamingQueries {
     * key identical, silently replaying the old slice dir. */
   private val maxTsCache =
     new java.util.concurrent.ConcurrentHashMap[String, java.sql.Timestamp]()
-  private def eventsSig(dir: String): Int = {
-    val root = new java.io.File(s"$dir/events.parquet")
-    val files =
-      if (root.isDirectory)
-        Option(root.listFiles()).getOrElse(Array.empty).sortBy(_.getName)
-      else Array(root)
-    files.map(f => s"${f.getName}:${f.length}:${f.lastModified}")
-      .mkString("|").hashCode
-  }
   private def maxEventTs(s: org.apache.spark.sql.SparkSession,
                          dir: String): java.sql.Timestamp =
     maxTsCache.computeIfAbsent(
-      s"${graft.SessionToken(s)}|$dir|${eventsSig(dir)}",
+      s"${graft.SessionToken(s)}|$dir|" +
+        Footers.listing(s, s"$dir/events.parquet").signature,
       _ => Tables.events(s, dir).agg(max(col("ts"))).head().getTimestamp(0))
 
   val defs: Seq[QueryDef] = Seq(

@@ -19,33 +19,12 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** (session, dir, table, file fingerprint) → inferred parquet schema,
-    * cached: a schemaless `read.parquet` runs a footer-inference job
-    * (~30 ms) on EVERY call, and a query build references these tables
-    * several times — measured round 16 as a visible slice of per-query
-    * frame-construction wall. The testdata is immutable for a session
-    * (driver contract); the key additionally folds in the path's
-    * size+mtime fingerprint (ADVICE r16) so a testdata dir regenerated
-    * while a session lives re-infers instead of silently misreading the
-    * new data through a stale schema. One stat call per lookup — no job. */
-  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.StructType]()
-
-  private def fingerprint(path: String): String =
-    try {
-      val a = java.nio.file.Files.readAttributes(
-        java.nio.file.Paths.get(path),
-        classOf[java.nio.file.attribute.BasicFileAttributes])
-      s"${a.size}:${a.lastModifiedTime.toMillis}"
-    } catch { case _: Exception => "absent" }
-
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val path = s"$dir/$name.parquet"
-    val sch = schemaCache.computeIfAbsent(
-      s"${graft.SessionToken(spark)}|$path|${fingerprint(path)}",
-      _ => spark.read.parquet(path).schema)
-    spark.read.schema(sch).parquet(path)
-  }
+  /** `dir/name.parquet` read with its footer schema ([[Footers.read]]):
+    * building a frame runs no job, however often a query references the
+    * table, and a table regenerated in place is re-read with its new
+    * schema. */
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
+    Footers.read(spark, s"$dir/$name.parquet")
 
   /** events.ts arrives in one of two parquet encodings depending on the
     * testdata generation: TIMESTAMP(NANOS), which Spark reads (under
@@ -64,25 +43,6 @@ object Tables {
       case TimestampNTZType => raw.withColumn("ts", col("ts").cast("timestamp"))
       case _ => raw
     }
-  }
-  /** Row count from the parquet footers — true metadata (block headers), no
-    * scan job, no Spark stage. The honest stand-in for a warehouse catalog's
-    * table statistics when a pipeline needs a size bound (e.g. sizing q22d's
-    * bloom sketch) without paying a pass over the data. */
-  def parquetRowCount(spark: SparkSession, path: String): Long = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    val conf = spark.sessionState.newHadoopConf()
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(conf)
-    val files =
-      if (fs.getFileStatus(p).isDirectory)
-        fs.listStatus(p).toSeq.filter(_.getPath.getName.endsWith(".parquet"))
-      else Seq(fs.getFileStatus(p))
-    files.map { f =>
-      val r = ParquetFileReader.open(HadoopInputFile.fromPath(f.getPath, conf))
-      try r.getRecordCount finally r.close()
-    }.sum
   }
 
   def lineitem(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "lineitem")

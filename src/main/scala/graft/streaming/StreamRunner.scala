@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.util.concurrent.atomic.AtomicInteger
 
+import graft.sources.Footers
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.state.StateStore
 import org.apache.spark.sql.functions.{col, lit, when}
@@ -38,39 +39,22 @@ object StreamRunner {
   private val replayCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** File-level signature of every file-source relation under `df`'s plan
-    * (root paths plus their files' names, sizes, mtimes). Replay keys
-    * include it because the logical plan's semanticHash sees only the
-    * PATH: regenerating a source in place (even preserving max(ts)) would
-    * otherwise leave every key unchanged and silently replay the stale
-    * slice materialization of the old data. */
-  private def sourceSig(df: DataFrame): Int = {
+    * (each root's full recursive [[Footers.listing]]: names, sizes,
+    * mtimes). Replay keys include it because the logical plan's
+    * semanticHash sees only the PATH: regenerating a source in place (even
+    * preserving max(ts), even a nested part file of a partitioned layout
+    * rewritten under the same name) would otherwise leave every key
+    * unchanged and silently replay the stale slice materialization of the
+    * old data. */
+  private def sourceSig(df: DataFrame): String = {
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    val roots = df.queryExecution.analyzed.collect {
+    df.queryExecution.analyzed.collect {
       case l: LogicalRelation => l.relation match {
-        case fs: HadoopFsRelation => fs.location.rootPaths.map(_.toUri.getPath)
+        case fs: HadoopFsRelation => fs.location.rootPaths.map(_.toString)
         case _ => Seq.empty[String]
       }
     }.flatten.sorted
-    roots.map { p =>
-      val root = java.nio.file.Paths.get(p)
-      // full recursive walk, not a root-level listing: a partitioned layout
-      // (day=*/part-*.parquet) exposes only subdir names at the root, so a
-      // nested part file rewritten in place under the same name would leave
-      // a shallow signature unchanged — the exact staleness this guards
-      val files: Seq[java.nio.file.Path] =
-        if (java.nio.file.Files.isDirectory(root)) {
-          val walk = java.nio.file.Files.walk(root)
-          try {
-            val b = Seq.newBuilder[java.nio.file.Path]
-            walk.filter(java.nio.file.Files.isRegularFile(_)).forEach(b += _)
-            b.result().sortBy(_.toString)
-          } finally walk.close()
-        } else Seq(root)
-      files.map { f =>
-        val file = f.toFile
-        s"${f.toAbsolutePath}:${file.length}:${file.lastModified}"
-      }.mkString("|")
-    }.mkString("||").hashCode
+      .map(Footers.listing(df.sparkSession, _).signature).mkString("||")
   }
 
   /** Replay-cache key of `df`: its session, schema, canonical plan and

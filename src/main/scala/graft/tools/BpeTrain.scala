@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.sources.Footers
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -61,14 +62,14 @@ object BpeTrain {
         lit(">")).as("w"), col("tf"))
       .write.mode("overwrite").parquet(s"$store/r0")
     val tfSec = (System.nanoTime() - t0) / 1e9
-    val vocab = spark.read.parquet(s"$store/r0").count()
+    val vocab = Footers.rowCount(spark, s"$store/r0")
 
     val times = Array.fill(rounds)(-1.0)
     var r = 0
     var exhausted = false
     while (r < rounds && !exhausted) {
       val rt0 = System.nanoTime()
-      val words = spark.read.parquet(s"$store/r$r")
+      val words = Footers.read(spark, s"$store/r$r")
       // 1-row driver read per round: the argmax merge (count DESC, pair ASC)
       val top = pairsOf(words)
         .orderBy(col("c").desc, col("a"), col("b")).limit(1).collect()

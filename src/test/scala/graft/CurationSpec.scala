@@ -236,7 +236,7 @@ class CurationSpec extends SparkSpec {
     assert(inc.nonEmpty)
     // batch membership: every incremental row is a batch doc (footer-mod rule)
     val mod = math.max(7L,
-      graft.sources.Tables.parquetRowCount(spark, s"$sf/documents.parquet") / 70L)
+      graft.sources.Footers.rowCount(spark, s"$sf/documents.parquet") / 70L)
     inc.foreach(r => assert(r._2 % mod === 0L, s"doc ${r._2} not in the batch"))
     // continuity: each lang's incremental stream starts EXACTLY at the
     // standing history's packed token total and tiles gaplessly from there

@@ -727,4 +727,20 @@ class PlanSpec extends SparkSpec {
     // the kernel runs once per row: its four fields read one bound struct
     assert("doc_signature\\(".r.findAllIn(p.toString).size === 1, p)
   }
+
+  test("Spread: a one-file scan broadcast-joined to a tiny frame is still spread") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import org.apache.spark.sql.functions.broadcast
+    import spark.implicits._
+    val tiny = Seq(0L, 1L, 2L).toDF("n_regionkey")
+    val joined = Tables.nation(spark, sf).join(broadcast(tiny), Seq("n_regionkey"))
+    val p = graft.queries.Spread(joined, col("n_nationkey")).queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.inputPlan
+      case p => p
+    }
+    assert(p.collect { case j: BroadcastHashJoinExec => j }.size === 1, p)
+    assert(p.collect { case e: ShuffleExchangeExec => e.shuffleOrigin } === Seq(REPARTITION_BY_NUM), p)
+  }
 }

@@ -3,6 +3,7 @@ package graft
 import scala.collection.mutable.ArrayBuffer
 
 import graft.tools.Profile
+import org.apache.spark.sql.SparkSession
 
 /** The profiler's contract: one JSON line per (target, pass) carrying
   * Bench's row, the jobs and (for streaming queries) the micro-batch
@@ -10,9 +11,10 @@ import graft.tools.Profile
   * listeners are left as they were. */
 class ProfileSpec extends SparkSpec {
 
-  private def profile(targets: Seq[String], passes: Int): Seq[String] = {
+  private def profile(targets: Seq[String], passes: Int,
+                      session: SparkSession = spark): Seq[String] = {
     val out = ArrayBuffer.empty[String]
-    Profile.run(spark, sf, targets, passes, emit = out += _)
+    Profile.run(session, sf, targets, passes, emit = out += _)
     out.toSeq
   }
 
@@ -43,11 +45,9 @@ class ProfileSpec extends SparkSpec {
   }
 
   test("every q10 job, AQE stage jobs included, carries its SQL execution id") {
-    // building the frame once first runs the session's one-time parquet
-    // schema inferences (Tables' cache), the only jobs that belong to no
-    // SQL execution and so print a null id
-    SparkEntry.queries("q10_region_revenue")(spark, sf)
-    val lines = profile(Seq("q10_region_revenue"), 2)
+    // a fresh session: its first frame build reads every table schema off
+    // the footers, so no job runs outside a SQL execution
+    val lines = profile(Seq("q10_region_revenue"), 2, spark.newSession())
     assert(lines.size === 2)
     lines.foreach { l =>
       val jobs = l.substring(l.indexOf(""""jobs":["""), l.indexOf(""""batches":"""))

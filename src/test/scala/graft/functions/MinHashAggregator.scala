@@ -6,7 +6,7 @@ import org.apache.spark.sql.expressions.Aggregator
 
 /** MinHash signature as a typed `Aggregator` (SURVEY.md §2.10): input rows
   * are element hashes (one per shingle, e.g. from
-  * [[TextHash.hash32]]/[[TextHash.hash32Fast]] over an exploded shingle
+  * [[TextHash.hash32]] over an exploded shingle
   * column), the buffer is the running k-slot minimum vector, the output the
   * finished signature.
   *
