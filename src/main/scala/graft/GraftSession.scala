@@ -40,6 +40,21 @@ object GraftSession {
       // isolation buys nothing; off, every session shares one loader and
       // one cache (CodegenReuseSpec).
       .config("spark.sql.artifact.isolation.enabled", "false")
+      // lower/upper through the JVM's Unicode tables, not ICU. With ICU
+      // (Spark 4's default) the first lower/upper call runs
+      // CollationAwareUTF8String.<clinit>, which fills initcap's one-to-many
+      // title-case table by calling ICU's toTitleCase on all 1,114,112 code
+      // points: about 2 s of CPU once per JVM, in every cold pass (q22's
+      // cold task CPU at sf0.01 fell 3286 -> 1240 ms on a 4-vCPU VM). No
+      // engine query calls initcap. Off, lower/upper are UTF8String.toLowerCase/
+      // toUpperCase (an ASCII fast path, then String's). Over every Unicode
+      // scalar value the two differ on 67 code points each, all added or
+      // given a case partner in Unicode 14-16, newer than JDK 17's tables;
+      // against DuckDB, the oracle, ICU differs on 71 (lower) and 172
+      // (upper), the JVM on 4 and 105, and on no code point does ICU match
+      // DuckDB where the JVM does not (tools/case_sweep.py, BASELINE.md
+      // "Case mapping on the JVM"; CaseMappingSpec).
+      .config("spark.sql.icu.caseMappings.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.streaming.sessionWindow.merge.sessions.in.local.partition", "true")
       // events.parquet stores ts as TIMESTAMP(NANOS); Spark has no nanos

@@ -307,14 +307,15 @@ object BehaviorQueries {
         .repartition(col("ub")))
 
   /** Affected-bucket set: distinct user buckets of the delta batch —
-    * bounded by ScdBuckets (≤64 values), collected once per (session, dir)
-    * exactly like q24m's probed-cell list: MERGE router metadata, never
-    * corpus-sized. */
+    * bounded by ScdBuckets (≤64 values), collected once per (session, dir,
+    * dir listing signature) exactly like q24m's probed-cell list: MERGE
+    * router metadata, never corpus-sized; events regenerated mid-session
+    * recollect it. */
   private val scdAffected =
     new java.util.concurrent.ConcurrentHashMap[String, Seq[Int]]()
   private[graft] def affectedBuckets(s: SparkSession, dir: String): Seq[Int] =
     scdAffected.computeIfAbsent(
-      s"${graft.SessionToken(s)}|$dir",
+      Footers.cacheKey(s, dir),
       _ => fourColEvents(s, dir).filter(scdDeltaPred(s, dir))
         .select(userBucket.as("ub")).distinct()
         .collect().map(_.getInt(0)).sorted.toSeq)

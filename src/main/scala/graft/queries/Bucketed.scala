@@ -38,8 +38,7 @@ object Bucketed {
 
   def apply(s: SparkSession, srcDir: String, tag: String, buckets: Int,
             bucketCol: String)(df: => DataFrame): DataFrame = {
-    val key = s"${graft.SessionToken(s)}|$tag|$buckets|$bucketCol|$srcDir|" +
-      graft.sources.Footers.listing(s, srcDir).signature
+    val key = s"$tag|$buckets|$bucketCol|${graft.sources.Footers.cacheKey(s, srcDir)}"
     var name = cache.get(key)
     if (name == null) {
       val tbl = s"graft_${tag}_${nameSeq.incrementAndGet()}"

@@ -101,8 +101,7 @@ object Materialize {
     * bounds, ADVICE r14). */
   private def key(s: SparkSession, srcDir: String, tag: String,
                   partCols: Seq[String]): String =
-    s"${graft.SessionToken(s)}|$tag|${partCols.mkString(",")}|$srcDir|" +
-      Footers.listing(s, srcDir).signature
+    s"$tag|${partCols.mkString(",")}|${Footers.cacheKey(s, srcDir)}"
 
   private def write(s: SparkSession, srcDir: String, tag: String,
                     partCols: Seq[String])(df: => DataFrame): DataFrame = {

@@ -422,14 +422,14 @@ object SimilarityQueries {
     s"""base AS (SELECT vec_id, label, embedding,
        |  sqrt(${sqlDot("embedding", "embedding")}) AS nrm FROM embeddings)""".stripMargin
 
-  /** Corpus row count for q24c's scale guard, computed once per (session,
-    * dir) from the materialized [[base]] table's parquet footers — the
-    * guard must not add a raw-corpus scan to every run (it is consulted on
-    * both bench passes and by the verify gate). */
-  private val baseCount = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-  private def guardCount(s: SparkSession, dir: String): Long =
-    baseCount.computeIfAbsent(s"${graft.SessionToken(s)}|$dir",
-      _ => java.lang.Long.valueOf(base(s, dir).count())).longValue()
+  /** Corpus row count for q24c's scale guard, read from the materialized
+    * [[base]] table's parquet footers — the guard must not add a corpus
+    * scan (or any job) to every run (it is consulted on both bench passes
+    * and by the verify gate). */
+  private def guardCount(s: SparkSession, dir: String): Long = {
+    base(s, dir)
+    Footers.rowCount(s, Materialize.pathFor(s, dir, "q24_base").get)
+  }
 
   /** Brute-force (qid, vec_id, cos) candidate frame: broadcast query set ×
     * full corpus — shared by q24 and the q24g recall evaluation. */
@@ -2025,11 +2025,10 @@ object SimilarityQueries {
         Seq("vec_id")))
     // the probed-cell literal: distinct plabel of the broadcast-sized probe
     // map — router metadata (≤ |coarse cells| values), collected ONCE per
-    // (session, dir) and cached: the probe set is a pure function of the
-    // materialized centroids + query set, and re-collecting it per
-    // execution would bill every bench pass a driver round-trip
-    val cells = probedCells.computeIfAbsent(
-      s"${graft.SessionToken(s)}|$dir",
+    // (session, dir, dir listing) and cached: the probe set is a pure
+    // function of the materialized centroids + query set, and re-collecting
+    // it per execution would bill every bench pass one more collect job
+    val cells = probedCells.computeIfAbsent(Footers.cacheKey(s, dir),
       _ => probeMap(s, dir).select(col("plabel")).distinct()
         .collect().map(_.getInt(0)).sorted.toSeq)
     byCell.filter(col("cell").isin(cells.map(Int.box): _*))
@@ -2095,11 +2094,11 @@ object SimilarityQueries {
     * gains one small parquet file per touched cell per night, compaction
     * is q43's job, and a RETRAIN (the only operation that rewrites the
     * standing files) is triggered by q67's drift signal, not by the
-    * append path. Built once per (session, dir); check-then-putIfAbsent
-    * like Materialize (the append must not re-run on a bench re-pass —
-    * it would duplicate batch rows). */
+    * append path. Built once per (session, dir, dir listing);
+    * check-then-putIfAbsent like Materialize (the append must not re-run
+    * on a bench re-pass — it would duplicate batch rows). */
   private[graft] def q24pMergedCodes(s: SparkSession, dir: String): DataFrame = {
-    val key = s"${graft.SessionToken(s)}|$dir"
+    val key = Footers.cacheKey(s, dir)
     var d = q24pCodesDirs.get(key)
     if (d == null) {
       val a = q24pArtifacts(s, dir)
@@ -2124,8 +2123,7 @@ object SimilarityQueries {
     * maintained layout. */
   private[graft] def q24pPrunedCodes(s: SparkSession, dir: String): DataFrame = {
     val merged = q24pMergedCodes(s, dir)
-    val cells = probedCells.computeIfAbsent(
-      s"q24p|${graft.SessionToken(s)}|$dir",
+    val cells = probedCells.computeIfAbsent(s"q24p|${Footers.cacheKey(s, dir)}",
       _ => probeMapOf(s, dir, q24pCent(s, dir)).select(col("plabel")).distinct()
         .collect().map(_.getInt(0)).sorted.toSeq)
     merged.filter(col("cell").isin(cells.map(Int.box): _*))

@@ -60,10 +60,20 @@ object Spread {
     * post-shuffle parallelism is governed by shuffle partitions / AQE,
     * not by file splits, so the spread gate does not apply. A broadcast
     * exchange does not count — a scan broadcast-joined to a small frame
-    * still runs at its file-split parallelism. */
-  private def hasShuffle(df: DataFrame): Boolean =
-    df.queryExecution.sparkPlan.exists(
+    * still runs at its file-split parallelism. Read off the PREPARED plan,
+    * where `EnsureRequirements` has inserted the shuffles an aggregate or
+    * join needs: under AQE that is the adaptive root's current plan before
+    * any stage runs. `sparkPlan`, and the adaptive root's `inputPlan`, come
+    * before that rule and hold only explicit repartitions. No job runs. */
+  private def hasShuffle(df: DataFrame): Boolean = {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    val prepared = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    prepared.exists(
       _.isInstanceOf[org.apache.spark.sql.execution.exchange.ShuffleExchangeLike])
+  }
 
   /** `df` hash-repartitioned on `key` to the session default parallelism,
     * iff it is scan-rooted (no shuffle anywhere in the plan — a shuffled

@@ -51,9 +51,7 @@ object StreamingQueries {
     new java.util.concurrent.ConcurrentHashMap[String, java.sql.Timestamp]()
   private def maxEventTs(s: org.apache.spark.sql.SparkSession,
                          dir: String): java.sql.Timestamp =
-    maxTsCache.computeIfAbsent(
-      s"${graft.SessionToken(s)}|$dir|" +
-        Footers.listing(s, s"$dir/events.parquet").signature,
+    maxTsCache.computeIfAbsent(Footers.cacheKey(s, s"$dir/events.parquet"),
       _ => Tables.events(s, dir).agg(max(col("ts"))).head().getTimestamp(0))
 
   val defs: Seq[QueryDef] = Seq(

@@ -55,6 +55,12 @@ object Footers {
   def listing(s: SparkSession, path: String): Listing =
     walk(s.sessionState.newHadoopConf(), path)
 
+  /** Key for a session cache of anything derived from the files under
+    * `path`: (session, path, listing signature), so a path regenerated
+    * mid-session keys a fresh entry instead of serving the old one. */
+  def cacheKey(s: SparkSession, path: String): String =
+    s"${graft.SessionToken(s)}|$path|${listing(s, path).signature}"
+
   private def walk(conf: Configuration, path: String): Listing = {
     val p = new Path(path)
     val fs = p.getFileSystem(conf)

@@ -178,7 +178,8 @@ object StreamRunner {
     * sees exactly `slices` micro-batches.
     *
     * `tagged` is written ONCE, its slices laid out as partitions of a
-    * hidden staging dir (one task, so one file, per slice). The slices are
+    * hidden staging dir (one task, so one file, per slice; one slice is
+    * `coalesce(1)`, which needs no shuffle). The slices are
     * then committed one by one, each file stamped by [[SliceStamper]]
     * BEFORE it becomes visible and renamed into `dir` under a per-publish
     * unique, visible name. The file source replays files in
@@ -202,7 +203,7 @@ object StreamRunner {
     import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.DEFAULT_PARTITION_NAME
     val staging = stagingDir(dir)
     try {
-      tagged.repartition(slices, col("__slice"))
+      (if (slices == 1) tagged.coalesce(1) else tagged.repartition(slices, col("__slice")))
         .write.partitionBy("__slice").parquet(staging.toString)
       val nulls = staging.resolve(s"__slice=$DEFAULT_PARTITION_NAME")
       require(!java.nio.file.Files.exists(nulls), s"$unsliced; " +

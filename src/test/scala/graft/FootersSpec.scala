@@ -137,6 +137,26 @@ class FootersSpec extends SparkSpec {
     assert(sigRows() === second)
   }
 
+  test("events regenerated mid-session re-collect q36e's affected buckets") {
+    import graft.queries.BehaviorQueries
+    import org.apache.spark.sql.functions.{hash, lit, pmod}
+    val dir = tmp("graft_footers_events")
+    // regenerate events.parquet from one half of the users; the affected
+    // bucket set computed from scratch over it
+    def regen(half: Int): Seq[Int] = {
+      Tables.events(spark, sf).filter(pmod(col("user_id"), lit(2)) === half).coalesce(1)
+        .write.mode("overwrite").parquet(s"$dir/events.parquet")
+      BehaviorQueries.fourColEvents(spark, dir).filter(BehaviorQueries.scdDeltaPred(spark, dir))
+        .select(pmod(hash(col("user_id")), lit(BehaviorQueries.ScdBuckets))).distinct()
+        .as[Int].collect().sorted.toSeq
+    }
+    val first = regen(0)
+    assert(BehaviorQueries.affectedBuckets(spark, dir) === first)
+    val second = regen(1)
+    assert(second.nonEmpty && second != first)
+    assert(BehaviorQueries.affectedBuckets(spark, dir) === second)
+  }
+
   test("listing: bytes and signature follow the files under the path") {
     val d = tmp("graft_footers_listing")
     Seq(1L, 2L).toDF("v").write.mode("overwrite").parquet(s"$d/p")

@@ -743,4 +743,50 @@ class PlanSpec extends SparkSpec {
     assert(p.collect { case j: BroadcastHashJoinExec => j }.size === 1, p)
     assert(p.collect { case e: ShuffleExchangeExec => e.shuffleOrigin } === Seq(REPARTITION_BY_NUM), p)
   }
+
+  test("Spread: a one-file scan aggregated by key gets no extra repartition") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS, ShuffleExchangeExec}
+    val agg = Tables.nation(spark, sf).groupBy("n_regionkey").agg(count(lit(1)).as("n"))
+    // spread key other than the aggregate's, so that EnsureRequirements
+    // could not drop a spread as a repartition its child already has
+    val p = graft.queries.Spread(agg, col("n")).queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan // prepared: EnsureRequirements applied
+      case p => p
+    }
+    assert(p.collect { case e: ShuffleExchangeExec => e.shuffleOrigin } === Seq(ENSURE_REQUIREMENTS), p)
+  }
+
+  test("writeSlices: a one-slice staging write plans no shuffle") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    val helper = new AdaptiveSparkPlanHelper {}
+    def writes = plans.asScala.toSeq.filter(p =>
+      helper.find(p)(_.isInstanceOf[DataWritingCommandExec]).isDefined)
+    val frame = Tables.nation(spark, sf).filter(col("n_regionkey") < 3)
+    spark.listenerManager.register(listener)
+    val dir = try {
+      val d = graft.streaming.StreamRunner.writeSlices(Seq(frame), "plan_one_slice")
+      // listeners hear of a finished execution asynchronously
+      val deadline = System.nanoTime() + 10000000000L
+      while (writes.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+      d
+    } finally spark.listenerManager.unregister(listener)
+    assert(writes.size === 1, plans)
+    assert(helper.find(writes.head)(_.isInstanceOf[ShuffleExchangeLike]).isEmpty, writes.head)
+    val visible = new java.io.File(dir).listFiles().map(_.getName)
+      .filter(n => n.endsWith(".parquet") && !n.startsWith(".") && !n.startsWith("_"))
+    assert(visible.length === 1, visible.toSeq)
+    assert(spark.read.parquet(dir).count() === frame.count())
+  }
 }
