@@ -16,7 +16,29 @@ import org.apache.spark.sql.SparkSession
 object GraftSession {
   def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
 
-  def builder(master: String = s"local[$cpus]"): SparkSession.Builder =
+  /** The languages whose default-locale case mapping differs from the
+    * root locale's — the JDK's own list (String.toLowerCase/toUpperCase
+    * special-case exactly these: dotted and dotless i in Turkish and
+    * Azeri, the combining dot above in Lithuanian). */
+  private val CaseChangingLanguages = Set("tr", "az", "lt")
+
+  /** Refuses a JVM whose default locale changes case mapping. With ICU
+    * off (below), Spark's lower/upper on non-ASCII text call
+    * String.toLowerCase()/toUpperCase() under the JVM's DEFAULT locale
+    * (UTF8String.toLowerCaseSlow), so under tr, az or lt they map I/i
+    * differently from DuckDB, the oracle: a silent misread, refused here
+    * instead (CaseMappingSpec). */
+  private def requireCaseNeutralLocale(): Unit = {
+    val l = java.util.Locale.getDefault
+    if (CaseChangingLanguages(l.getLanguage))
+      throw new IllegalStateException(
+        s"default locale ${l.toLanguageTag} changes lower/upper case mapping (I/i), " +
+          "so queries would not match the oracle; start the JVM with a " +
+          "case-neutral language, e.g. -Duser.language=en")
+  }
+
+  def builder(master: String = s"local[$cpus]"): SparkSession.Builder = {
+    requireCaseNeutralLocale()
     SparkSession
       .builder()
       .master(master)
@@ -69,6 +91,7 @@ object GraftSession {
       .config("spark.sql.files.openCostInBytes",
         sys.env.getOrElse("SPARK_GRAFT_OPEN_COST", "131072"))
       .config("spark.ui.enabled", "false")
+  }
 
   def get(): SparkSession = {
     val spark = builder().getOrCreate()

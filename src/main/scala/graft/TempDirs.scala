@@ -1,8 +1,10 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
 import java.util.Comparator
 import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.util.control.NonFatal
 
 /** Tracked scratch directories, deleted on JVM exit.
   *
@@ -18,16 +20,10 @@ object TempDirs {
   Runtime.getRuntime.addShutdownHook(new Thread(() => {
     val leftover = new java.util.ArrayList[Path]()
     created.forEach { p =>
-      // best-effort but not blind: other shutdown hooks (Spark's checkpoint
-      // flush) may still be writing; anything that survives is reported so
-      // a reintroduced leak is visible, and the walk stream is closed so
-      // the hook can't exhaust handles across many dirs
-      try {
-        val walk = Files.walk(p)
-        try walk.sorted(Comparator.reverseOrder[Path]())
-          .forEach(f => { try Files.deleteIfExists(f) catch { case _: Exception => () } })
-        finally walk.close()
-      } catch { case _: Exception => () }
+      // other shutdown hooks (Spark's checkpoint flush) may still be
+      // writing; anything that survives is reported so a reintroduced leak
+      // is visible
+      delete(p.toString)
       if (Files.exists(p)) leftover.add(p)
     }
     if (!leftover.isEmpty)
@@ -42,16 +38,27 @@ object TempDirs {
     p.toFile.getAbsolutePath
   }
 
-  /** Eagerly reclaim a tracked dir whose contents are no longer referenced
-    * by any live plan (iterative builders drop superseded rounds here so
-    * scratch residency stays O(2 rounds), not O(all rounds)). Safe to call
-    * before JVM exit: the shutdown hook tolerates already-deleted paths. */
+  /** Best-effort recursive delete of `dir`, deepest entries first — the
+    * one tree delete for tracked dirs (iterative builders drop superseded
+    * rounds here so scratch residency stays O(2 rounds), not O(all
+    * rounds)), the exit hook above and slice-commit staging dirs. Every
+    * entry is tried: an aborted or retried task can leave a non-empty
+    * `_temporary` subdir, which a flat delete skips and a bare
+    * deleteIfExists of its parent then fails on. A missing path, or an
+    * entry that cannot be deleted, returns quietly (the exit hook reports
+    * survivors); an interrupt is not swallowed — its flag is restored so
+    * the caller's cancellation still lands. */
   def delete(dir: String): Unit = {
-    try {
-      val walk = Files.walk(java.nio.file.Paths.get(dir))
+    def quietly(f: => Unit): Unit =
+      try f catch {
+        case _: InterruptedException => Thread.currentThread().interrupt()
+        case NonFatal(_) => ()
+      }
+    quietly {
+      val walk = Files.walk(Paths.get(dir))
       try walk.sorted(Comparator.reverseOrder[Path]())
-        .forEach(f => { try Files.deleteIfExists(f) catch { case _: Exception => () } })
+        .forEach(f => quietly(Files.deleteIfExists(f)))
       finally walk.close()
-    } catch { case _: Exception => () }
+    }
   }
 }

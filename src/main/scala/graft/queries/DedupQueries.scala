@@ -189,29 +189,62 @@ object DedupQueries {
 
   private lazy val sqlExactSubstrOracle: String = sqlExactSubstrOracleW(SubstrW)
 
-  /** Spark twin of [[sqlSubstrSpanTail]]: removable windows
-    * (doc_id, n, pos, endp) → merged maximal spans → per-doc report.
-    * The windows partition by doc_id — bounded by document length. */
-  private def substrSpanReport(r: DataFrame): DataFrame = {
+  /** Gaps-and-islands span merge: removable windows (doc_id, pos, endp,
+    * any per-doc columns) → one row per maximal per-doc span, (doc_id,
+    * the per-doc columns, gid, sp_start, sp_end). The per-doc columns
+    * (constant within a doc, e.g. its token count `n`) ride the group
+    * key. Shared by the ExactSubstr report ([[substrSpanReport]]) and
+    * q58's repetition coverage. The windows partition by doc_id —
+    * bounded by document length. */
+  private[queries] def mergedSpans(r: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val byDoc = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
     val prevEnd = max(col("endp")).over(byDoc.rowsBetween(Window.unboundedPreceding, -1))
-    val isl = r
-      .withColumn("brk",
+    val perDoc = r.columns.toSeq.filterNot(Set("pos", "endp")).map(col)
+    r.withColumn("brk",
         when(col("pos") > coalesce(prevEnd, lit(-999)) + 1, 1L).otherwise(0L))
       .withColumn("gid",
         sum(col("brk")).over(byDoc.rowsBetween(Window.unboundedPreceding, 0)))
-    val sp = isl.groupBy(col("doc_id"), col("gid"))
-      .agg(min(col("pos")).as("sp_start"), max(col("endp")).as("sp_end"),
-        max(col("n")).as("n"))
-    sp.groupBy(col("doc_id"))
+      .groupBy(perDoc :+ col("gid"): _*)
+      .agg(min(col("pos")).as("sp_start"), max(col("endp")).as("sp_end"))
+  }
+
+  /** Spark twin of [[sqlSubstrSpanTail]]: removable width-`ww` windows
+    * (doc_id, n, pos) → merged maximal spans → per-doc report. */
+  private def substrSpanReport(r: DataFrame, ww: Int): DataFrame =
+    mergedSpans(r.select(col("doc_id"), col("n"), col("pos"),
+        (col("pos") + (ww - 1)).as("endp")))
+      .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_spans"),
         sum(col("sp_end") - col("sp_start") + 1).as("dup_tokens"),
         max(col("n")).as("nn"))
       .select(col("doc_id"), col("n_spans"), col("dup_tokens"),
         round(col("dup_tokens").cast("double") / col("nn"), 6).as("dup_frac"))
       .orderBy("doc_id")
-  }
+
+  /** The ExactSubstr keeper rule: per `key` repeated at least twice, the
+    * lexicographically first (doc_id, pos) occurrence is the `keeper`,
+    * as (key, keeper). A groupBy, not a window over the key: a
+    * heavy-hitter key collapses map-side, and the join back onto the
+    * occurrences is an equi-join AQE's skew rule can split. */
+  private def keepers(w: DataFrame, key: String): DataFrame =
+    w.groupBy(col(key)).agg(
+        count(lit(1)).as("cnt"),
+        min(struct(col("doc_id"), col("pos"))).as("keeper"))
+      .filter(col("cnt") >= 2)
+      .select(col(key), col("keeper"))
+
+  /** An occurrence joined to its [[keepers]] row that is not the keeper:
+    * a removable window. */
+  private val notKeeper: Column =
+    col("doc_id") =!= col("keeper.doc_id") || col("pos") =!= col("keeper.pos")
+
+  /** Full ExactSubstr removal over width-`ww` windows (doc_id, n, pos,
+    * `key`): every non-keeper occurrence of a repeated key is removable,
+    * then the span merge and per-doc report. q47 (fingerprint keys) and
+    * the suffix-array paths (literal window content) share it. */
+  private def exactSubstrReport(w: DataFrame, key: String, ww: Int): DataFrame =
+    substrSpanReport(w.join(keepers(w, key), Seq(key)).filter(notKeeper), ww)
 
   /** q23i's deterministic recall-sample rule: every doc with
     * doc_id % 10 == 0 is a monitored query point. Fixed RATE (not fixed
@@ -421,33 +454,64 @@ object DedupQueries {
     * the q63 oracle itself rests on — its DuckDB side sorts exactly these
     * strings). q63g compares batch suffixes against standing-index
     * suffixes through this key. */
-  private def suffixKey: Column =
-    concat_ws("\u0001", slice(col("toks"), col("pos").cast("int"), lit(SaDepth)))
+  private def suffixKey: Column = concat_ws("\u0001", suffixSlice)
 
-  /** STANDING history SA key table (doc_id, pos, sa_pos, skey) — the
-    * per-snapshot index artifact the q63g nightly merge probes: history
-    * suffix-array positions (built once by the q63 machinery over history
-    * docs only) carrying their depth-bounded order keys. */
-  private def histSaKeys(s: SparkSession, dir: String): DataFrame =
-    Materialize(s, dir, "sa_hist_keys") {
-      saKeysOf(s, dir,
-        Tables.documents(s, dir).filter(col("doc_id") % 7 =!= 0)
-          .select(col("doc_id"), col("text")), "sa_hist_ranks", "sa_hist_pos")
-    }
+  /** The suffix's depth-[[SaDepth]] token slice, off a (toks, pos) row. */
+  private val suffixSlice: Column =
+    slice(col("toks"), col("pos").cast("int"), lit(SaDepth))
+
+  /** Suffix-array POSITIONS (doc_id, pos, sa_pos) off prefix-doubling
+    * ranks (doc_id, pos, r): the ranks are dense over depth-[[SaDepth]]
+    * prefix classes, so appending the (doc_id, pos) tie-break makes every
+    * key unique and a dense rank over (r, doc_id, pos) IS the suffix-array
+    * position — the same two-phase distributed re-rank assigns it, no
+    * global sort anywhere. */
+  private def saPosOf(s: SparkSession, r: DataFrame, tag: String): DataFrame =
+    distDenseRank(s, r.select(col("r").as("rk"), col("doc_id"), col("pos")),
+        Seq("rk", "doc_id", "pos"), tag)
+      .select(col("doc_id"), col("pos"), col("r").as("sa_pos"))
 
   /** SA KEY TABLE of an arbitrary (doc_id, text) frame — (doc_id, pos,
     * sa_pos, skey): suffix-array positions built by the q63 machinery
-    * carrying their depth-bounded order keys, the snapshot artifact shape
-    * every standing index ([[histSaKeys]], the [[saChain]] base) stores. */
+    * carrying their depth-bounded order keys, the key shape every standing
+    * snapshot ([[SaSnapshot]]) stores and every nightly batch
+    * ([[mergedSaOf]]) merges in. */
   private def saKeysOf(s: SparkSession, dir: String, docsFrame: DataFrame,
                        rankTag: String, posTag: String): DataFrame = {
     val (docs, r) = suffixRanksOf(s, dir, docsFrame, rankTag)
-    distDenseRank(s, r.select(col("r").as("rk"), col("doc_id"), col("pos")),
-        Seq("rk", "doc_id", "pos"), posTag)
-      .select(col("doc_id"), col("pos"), col("r").as("sa_pos"))
-      .join(docs, Seq("doc_id"))
+    saPosOf(s, r, posTag).join(docs, Seq("doc_id"))
       .select(col("doc_id"), col("pos"), col("sa_pos"), suffixKey.as("skey"))
   }
+
+  /** A STANDING suffix-array snapshot over the doc set `base` (doc_id,
+    * text, …): the per-snapshot index artifacts a nightly merge probes,
+    * each materialized on first use under `<tag>_<artifact>`:
+    *  - `keys` (doc_id, pos, sa_pos, skey) — [[saKeysOf]] over the base;
+    *  - `lcp` (a_doc, a_pos, b_doc, b_pos, lcp) — the base array's
+    *    adjacency LCPs, which the nightly LCP update ([[updatedLcp]])
+    *    carries forward wherever no batch suffix split the pair; spread on
+    *    write, since the update's retained-pair pass rides its scan.
+    * One builder for the q63g/q63h history snapshot ([[histSnapshot]])
+    * and the chain's base ([[saChainUpTo]]). */
+  private final class SaSnapshot(s: SparkSession, dir: String,
+                                 base: DataFrame, tag: String) {
+    lazy val keys: DataFrame = Materialize(s, dir, s"${tag}_keys") {
+      saKeysOf(s, dir, base.select(col("doc_id"), col("text")),
+        s"${tag}_ranks", s"${tag}_pos")
+    }
+    lazy val lcp: DataFrame =
+      Materialize.spreadOnWrite(s, dir, s"${tag}_lcp", col("a_doc")) {
+        lcpOfAdjacent(withSuffixSlices(
+          keys.select(col("doc_id"), col("pos"), col("sa_pos")),
+          base.select(col("doc_id"), tokens(col("text")).as("toks"))))
+      }
+  }
+
+  /** The q63g/q63h standing snapshot: every doc outside tonight's batch
+    * (the doc_id % 7 rule). */
+  private def histSnapshot(s: SparkSession, dir: String): SaSnapshot =
+    new SaSnapshot(s, dir,
+      Tables.documents(s, dir).filter(col("doc_id") % 7 =!= 0), "sa_hist")
 
   /** The NIGHTLY SA merge (q63g/q63h shared): batch suffix ranks built by
     * the q63 machinery over batch docs only, interleaved into the standing
@@ -478,17 +542,11 @@ object DedupQueries {
                          mTag: String): DataFrame =
     Materialize(s, dir, mTag) {
       import org.apache.spark.sql.expressions.Window
-      val (bDocs, bR) = suffixRanksOf(s, dir, batchDocs, rankTag)
-      val bSa = distDenseRank(s,
-          bR.select(col("r").as("rk"), col("doc_id"), col("pos")),
-          Seq("rk", "doc_id", "pos"), s"${rankTag}_pos")
-        .select(col("doc_id"), col("pos"), col("r").as("b_rank"))
-      val bk = bSa.join(bDocs, Seq("doc_id"))
-        .select(col("doc_id"), col("pos"), col("b_rank"), suffixKey.as("skey"))
+      val bk = saKeysOf(s, dir, batchDocs, rankTag, s"${rankTag}_pos")
       val u = hk.select(col("skey"), col("doc_id"), col("pos"),
           col("sa_pos"), lit(0L).as("isb"), lit(0L).as("b_rank"))
         .unionByName(bk.select(col("skey"), col("doc_id"), col("pos"),
-          lit(0L).as("sa_pos"), lit(1L).as("isb"), col("b_rank")))
+          lit(0L).as("sa_pos"), lit(1L).as("isb"), col("sa_pos").as("b_rank")))
       val ord = Seq(col("skey"), col("doc_id"), col("pos"))
       val w = Window.partitionBy(col("_pid")).orderBy(ord: _*)
       val pinDir = graft.TempDirs.create("graft_sa_merge_")
@@ -521,12 +579,13 @@ object DedupQueries {
   private[graft] def mergedSaFrame(s: SparkSession, dir: String): DataFrame =
     mergedSa(s, dir)
 
-  /** The SA report's evidence tail shared by q63g/q63i: the bounded
+  /** The SA report's evidence tail shared by q63/q63g/q63i: the bounded
     * top-k (sa_pos, doc_id, pos) frame broadcast-joins the RAW text scan
     * and only the ≤ [[SaTopK]] surviving rows are tokenized for their
     * 8-token prefix (round 17; guide §8 "decide with small rows") —
     * previously each report tokenized the whole corpus to render a
-    * bounded result. */
+    * bounded result. The ≤ SaTopK rows are ordered in ONE partition: a
+    * global sort's range exchange would sample them in a job of its own. */
   private def prefix8Report(s: SparkSession, dir: String,
                             top: DataFrame): DataFrame =
     Tables.documents(s, dir)
@@ -538,100 +597,79 @@ object DedupQueries {
           (0 until 8).map(j =>
             try_element_at(col("toks"), (col("pos") + lit(j)).cast("int"))): _*)
           .as("prefix8"))
-      .orderBy("sa_pos")
+      .repartition(1).sortWithinPartitions("sa_pos")
 
   /** The q63g/q63h night: tonight's batch (the doc_id % 7 rule) merged
-    * into the [[histSaKeys]] standing snapshot, stored once as
-    * `sa_merged` and read by both consumers. */
+    * into the [[histSnapshot]] keys, stored once as `sa_merged` and read
+    * by both consumers. */
   private def mergedSa(s: SparkSession, dir: String): DataFrame =
-    mergedSaOf(s, dir, histSaKeys(s, dir),
+    mergedSaOf(s, dir, histSnapshot(s, dir).keys,
       CurationPipeline.nightBatch(s, dir).select(col("doc_id"), col("text")),
       "sa_batch_ranks", "sa_merged")
 
-  /** Suffix-array POSITIONS (doc_id, pos, sa_pos), materialized: the
-    * prefix-doubling ranks are dense over depth-[[SaDepth]] prefix
-    * classes, so appending the (doc_id, pos) tie-break makes every key
-    * unique and a dense rank over (r, doc_id, pos) IS the suffix-array
-    * position — the same two-phase distributed re-rank assigns it, no
-    * global sort anywhere. Stored once beside the rank table (this is the
-    * index Lee et al. persist and operate on) and shared by the LCP table
-    * below — previously q63b and q63c each re-derived it per query. */
+  /** Suffix-array POSITIONS (doc_id, pos, sa_pos) of the whole corpus
+    * ([[saPosOf]] over [[suffixRanks]]), materialized: stored once beside
+    * the rank table (this is the index Lee et al. persist and operate on)
+    * and shared by the LCP table below — previously q63b and q63c each
+    * re-derived it per query. */
   private def saPositions(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val (docs, r) = suffixRanks(s, dir)
-    val sa = Materialize(s, dir, "sa_positions") {
-      distDenseRank(s, r.select(col("r").as("rk"), col("doc_id"), col("pos")),
-        Seq("rk", "doc_id", "pos"), "sa_pos")
-        .select(col("doc_id"), col("pos"), col("r").as("sa_pos"))
-    }
-    (docs, sa)
+    (docs, Materialize(s, dir, "sa_positions") { saPosOf(s, r, "sa_pos") })
   }
 
   /** The LCP ARRAY over suffix-array neighbors, materialized:
     * (a_doc, a_pos, b_doc, b_pos, lcp) for each adjacent pair (i, i+1),
-    * LCP bounded at [[SaDepth]] like the array order itself. Neighbor
-    * pairing is ONE equi-join on sa_pos = sa_pos + 1 (AQE-splittable);
-    * the compare joins each side's bounded token slice and runs
-    * zip_with + array_position over them — codegen'd, no UDF (zip_with
-    * pads the shorter side with null and <=> reads that as a mismatch,
-    * exactly the oracle's IS NOT DISTINCT FROM over the range-capped
-    * index list; no mismatch ⇒ identical slices ⇒ lcp = min length).
-    * Built ONCE, width-free — the point of the suffix array: the same
-    * stored (SA, LCP) pair serves the duplication spectrum (q63b) and
-    * removal at EVERY minimum-match threshold (q63c, q63d) without
-    * touching the corpus again. */
+    * LCP bounded at [[SaDepth]] like the array order itself
+    * ([[lcpOfAdjacent]]). Built ONCE, width-free — the point of the
+    * suffix array: the same stored (SA, LCP) pair serves the duplication
+    * spectrum (q63b) and removal at EVERY minimum-match threshold (q63c,
+    * q63d) without touching the corpus again. */
   private def saLcp(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val (docs, sa) = saPositions(s, dir)
     // spread on write (guide §6): q63b/c/d/e/f all layer per-row work on
     // this table's scan; one coalesced output file serialized it
     val lcpT = Materialize.spreadOnWrite(s, dir, "sa_lcp", col("a_doc")) {
-      lcpOfAdjacent(withSuffixSlices(sa, docs)).drop("a_sa", "b_sa")
+      lcpOfAdjacent(withSuffixSlices(sa, docs))
     }
     (docs, lcpT)
   }
 
-  /** (sa_pos, doc_id, pos, sfx) — positioned suffixes with their
-    * depth-bounded token slices, the input shape of [[lcpOfAdjacent]]. */
-  private def withSuffixSlices(sa: DataFrame, docs: DataFrame): DataFrame =
-    sa.join(docs, Seq("doc_id"))
-      .select(col("sa_pos"), col("doc_id"), col("pos"),
-        slice(col("toks"), col("pos").cast("int"), lit(SaDepth)).as("sfx"))
+  /** `at`'s rows (doc_id, pos, …) with their depth-bounded suffix token
+    * slice `sfx`, off the tokenized docs (doc_id, toks). */
+  private def withSuffixSlices(at: DataFrame, docs: DataFrame): DataFrame =
+    at.join(docs, Seq("doc_id"))
+      .select(at.columns.toSeq.map(col) :+ suffixSlice.as("sfx"): _*)
 
-  /** Adjacent-pair LCPs of a positioned suffix frame: ONE sa_pos+1
-    * equi-join, zip_with + array_position compare (codegen'd, no UDF —
-    * zip_with pads the shorter side with null and <=> reads that as a
-    * mismatch, the oracle's IS NOT DISTINCT FROM; no mismatch ⇒ identical
-    * slices ⇒ lcp = min length). Shared by the full-corpus LCP table
-    * (q63b/c/d via [[saLcp]]) and the standing HISTORY LCP table the q63h
-    * incremental update retains entries from — one compare rule, so the
-    * two tables cannot diverge on what "LCP" means. Output:
-    * (a_sa, a_doc, a_pos, b_sa, b_doc, b_pos, lcp). */
-  private def lcpOfAdjacent(withToks: DataFrame): DataFrame = {
-    val pairs = withToks.as("x")
-      .join(withToks.as("y"), col("x.sa_pos") + 1 === col("y.sa_pos"))
-    val ap = array_position(
-      zip_with(col("x.sfx"), col("y.sfx"), (u, v) => u.eqNullSafe(v)), false)
-    pairs.select(
-      col("x.sa_pos").as("a_sa"), col("x.doc_id").as("a_doc"),
-      col("x.pos").as("a_pos"),
-      col("y.sa_pos").as("b_sa"), col("y.doc_id").as("b_doc"),
-      col("y.pos").as("b_pos"),
-      coalesce(when(ap > 0, ap - 1),
-        least(size(col("x.sfx")), size(col("y.sfx"))).cast("long")).as("lcp"))
+  /** The LCP of two depth-bounded suffix slices: zip_with +
+    * array_position, codegen'd, no UDF. zip_with pads the shorter side
+    * with null and <=> reads that as a mismatch, exactly the oracle's IS
+    * NOT DISTINCT FROM over the range-capped index list; no mismatch ⇒
+    * identical slices ⇒ lcp = min length. The one compare rule of every
+    * LCP table — the full index, the standing snapshots and the nightly
+    * update — so no two tables can diverge on what "LCP" means. */
+  private def sliceLcp(a: Column, b: Column): Column = {
+    val ap = array_position(zip_with(a, b, (u, v) => u.eqNullSafe(v)), false)
+    coalesce(when(ap > 0, ap - 1), least(size(a), size(b)).cast("long"))
   }
 
-  /** STANDING history LCP table (a_sa, a_doc, a_pos, b_sa, b_doc, b_pos,
-    * lcp) — the per-snapshot artifact beside [[histSaKeys]]: adjacency
-    * LCPs of the HISTORY suffix array, which the q63h incremental update
-    * carries forward wherever no batch suffix split the pair. */
-  private def histSaLcp(s: SparkSession, dir: String): DataFrame =
-    // spread on write: q63h's retained-pair pass rides this table's scan
-    Materialize.spreadOnWrite(s, dir, "sa_hist_lcp", col("a_doc")) {
-      val hdocs = Tables.documents(s, dir).filter(col("doc_id") % 7 =!= 0)
-        .select(col("doc_id"), tokens(col("text")).as("toks"))
-      lcpOfAdjacent(withSuffixSlices(
-        histSaKeys(s, dir).select(col("doc_id"), col("pos"), col("sa_pos")),
-        hdocs))
-    }
+  /** Adjacent-pair LCPs of a positioned suffix frame (sa_pos, doc_id,
+    * pos, sfx): ONE sa_pos+1 equi-join (AQE-splittable), then
+    * [[sliceLcp]]. Output: (a_doc, a_pos, b_doc, b_pos, lcp). */
+  private def lcpOfAdjacent(withToks: DataFrame): DataFrame =
+    withToks.as("x")
+      .join(withToks.as("y"), col("x.sa_pos") + 1 === col("y.sa_pos"))
+      .select(col("x.doc_id").as("a_doc"), col("x.pos").as("a_pos"),
+        col("y.doc_id").as("b_doc"), col("y.pos").as("b_pos"),
+        sliceLcp(col("x.sfx"), col("y.sfx")).as("lcp"))
+
+  /** (doc_id, toks) of only the docs `ids` names: the RAW text scan is
+    * semi-filtered to those doc_ids BEFORE the tokenizer projection (round
+    * 17; guide §8 "decide with small rows"), so the tokenize cost follows
+    * the id frame (a night's endpoint docs, the docs holding duplicate
+    * mass), not the corpus. */
+  private def tokenizedOnly(docsRaw: DataFrame, ids: DataFrame): DataFrame =
+    docsRaw.join(ids.select(col("doc_id")).distinct(), Seq("doc_id"), "left_semi")
+      .select(col("doc_id"), tokens(col("text")).as("toks"))
 
   /** The NIGHTLY LCP UPDATE off a merge frame `m` (a [[mergedSaOf]]
     * output) and standing LCP table `hl` — the q63h decomposition as a
@@ -691,21 +729,12 @@ object DedupQueries {
       .select(col("a_doc"), col("a_pos"), col("b_doc"), col("b_pos"),
         col("lcp"))
     // slices for the new pairs: only the docs the endpoint frame touches
-    // are TOKENIZED at all (round 17; guide §8 "decide with small rows"):
-    // the distinct endpoint doc_ids semi-filter the RAW text scan before
-    // the tokenizer projection, so the per-night tokenize cost is
-    // batch-proportional — previously the whole corpus was tokenized to
-    // serve batch-proportional slice lookups. The resulting slice rows
-    // are the wide ones and meet the pair frame by equi-join.
+    // are tokenized at all; the wide slice rows meet the pair frame by
+    // equi-join
     val ends = np.select(col("a_doc").as("doc_id"), col("a_pos").as("pos"))
       .unionByName(np.select(col("b_doc").as("doc_id"), col("b_pos").as("pos")))
       .distinct()
-    val needDocs = docsRaw
-      .join(ends.select(col("doc_id")).distinct(), Seq("doc_id"), "left_semi")
-      .select(col("doc_id"), tokens(col("text")).as("toks"))
-    val slices = needDocs.join(ends, Seq("doc_id"))
-      .select(col("doc_id"), col("pos"),
-        slice(col("toks"), col("pos").cast("int"), lit(SaDepth)).as("sfx"))
+    val slices = withSuffixSlices(ends, tokenizedOnly(docsRaw, ends))
     val withA = np.join(slices,
         col("a_doc") === col("doc_id") && col("a_pos") === col("pos"))
       .select(col("a_doc"), col("a_pos"), col("b_doc"), col("b_pos"),
@@ -714,18 +743,16 @@ object DedupQueries {
         slices.select(col("doc_id").as("d2"), col("pos").as("p2"),
           col("sfx").as("bsfx")),
         col("b_doc") === col("d2") && col("b_pos") === col("p2"))
-    val ap = array_position(
-      zip_with(col("asfx"), col("bsfx"), (u, v) => u.eqNullSafe(v)), false)
     val newLcp = withB.select(col("a_doc"), col("a_pos"),
-      col("b_doc"), col("b_pos"),
-      coalesce(when(ap > 0, ap - 1),
-        least(size(col("asfx")), size(col("bsfx"))).cast("long")).as("lcp"))
+      col("b_doc"), col("b_pos"), sliceLcp(col("asfx"), col("bsfx")).as("lcp"))
     retained.unionByName(newLcp)
   }
 
   /** The LCP duplicate-mass histogram tail shared verbatim by q63b's
     * full-table read, q63h's one-night update, and q63j's chained table:
-    * per-value pair count + least (doc_id, pos) witness. */
+    * per-value pair count + least (doc_id, pos) witness. The groups are
+    * ≤ SaDepth+1, so map-side partials collapse everything before the
+    * shuffle. */
   private def lcpHistogram(lcpRows: DataFrame): DataFrame =
     lcpRows.groupBy(col("lcp"))
       .agg(count(lit(1)).as("n_pairs"),
@@ -759,30 +786,19 @@ object DedupQueries {
   private def saChain(s: SparkSession, dir: String): (DataFrame, DataFrame) =
     saChainUpTo(s, dir, ChainNights)
 
-  /** [[saChain]] stopped after `nights` merges (the base snapshot is
-    * always the % 7 >= ChainNights split, so night k's inputs are
-    * identical however many nights follow). Materialize caching makes
-    * successive calls pay ONLY the new night — the per-night growth
-    * probe's instrument (Profile `sa_night<k>`). */
+  /** [[saChain]] stopped after `nights` merges (the base snapshot
+    * `sa_chain_v0` is always the % 7 >= ChainNights split, so night k's
+    * inputs are identical however many nights follow). Materialize
+    * caching makes successive calls pay ONLY the new night — the
+    * per-night growth probe's instrument (Profile `sa_night<k>`). */
   private[graft] def saChainUpTo(s: SparkSession, dir: String,
                                  nights: Int): (DataFrame, DataFrame) = {
     require(nights >= 0 && nights <= ChainNights, s"nights 0..$ChainNights")
-    // raw text scan for the nightly LCP updates: updatedLcp semi-filters
-    // it to each night's endpoint docs before tokenizing (round 17)
-    val docsAll = Tables.documents(s, dir)
-    val base = Tables.documents(s, dir)
-      .filter(col("doc_id") % 7 >= ChainNights)
-    var hk = Materialize(s, dir, "sa_chain_keys_v0") {
-      saKeysOf(s, dir, base.select(col("doc_id"), col("text")),
-        "sa_chain_ranks_v0", "sa_chain_pos_v0")
-    }
-    var hl = Materialize(s, dir, "sa_chain_lcp_v0") {
-      val hdocs = base.select(col("doc_id"), tokens(col("text")).as("toks"))
-      lcpOfAdjacent(withSuffixSlices(
-          hk.select(col("doc_id"), col("pos"), col("sa_pos")), hdocs))
-        .select(col("a_doc"), col("a_pos"), col("b_doc"), col("b_pos"),
-          col("lcp"))
-    }
+    val v0 = new SaSnapshot(s, dir,
+      Tables.documents(s, dir).filter(col("doc_id") % 7 >= ChainNights),
+      "sa_chain_v0")
+    var hk = v0.keys
+    var hl = v0.lcp
     for (k <- 0 until nights) {
       val m = mergedSaOf(s, dir, hk,
         Tables.documents(s, dir).filter(col("doc_id") % 7 === k)
@@ -791,7 +807,7 @@ object DedupQueries {
       hk = m.select(col("doc_id"), col("pos"),
         col("m_pos").as("sa_pos"), col("skey"))
       hl = Materialize(s, dir, s"sa_chain_lcp_v${k + 1}") {
-        updatedLcp(m, hl, docsAll)
+        updatedLcp(m, hl, Tables.documents(s, dir))
       }
     }
     (hk, hl)
@@ -806,8 +822,8 @@ object DedupQueries {
     * detection reads the MATERIALIZED LCP table, so changing ww re-runs
     * only this tail. Only the marked positions (the duplicate mass, not
     * the corpus) rejoin the docs for their literal ww-token window
-    * content; then q47's min(struct(doc_id, pos)) keeper rule and the
-    * shared span merge + report. An LCP ≥ ww pair's suffixes both hold
+    * content; then q47's keeper rule and the shared span merge + report
+    * ([[exactSubstrReport]]). An LCP ≥ ww pair's suffixes both hold
     * ≥ ww tokens (LCP ≤ min suffix length), so the slice is always full
     * width. */
   private def saSubstrDedup(s: SparkSession, dir: String, ww: Int): DataFrame = {
@@ -819,26 +835,13 @@ object DedupQueries {
         struct(col("b_doc").as("doc_id"), col("b_pos").as("pos")))).as("m"))
       .select(col("m.doc_id"), col("m.pos"))
       .distinct()
-    // tokenize AFTER the marked-doc semi-filter (round 17; guide §8):
-    // only docs that actually hold duplicate mass are tokenized for their
-    // window content — previously the removal tail re-tokenized the WHOLE
-    // corpus per consumer per run to serve marked-position lookups
-    val docs = Tables.documents(s, dir)
-      .join(marked.select(col("doc_id")).distinct(), Seq("doc_id"), "left_semi")
-      .select(col("doc_id"), tokens(col("text")).as("toks"))
-    val withWin = marked.join(docs, Seq("doc_id"))
+    val withWin = marked
+      .join(tokenizedOnly(Tables.documents(s, dir), marked), Seq("doc_id"))
       .select(col("doc_id"), col("pos"),
         size(col("toks")).cast("long").as("n"),
         concat_ws("\u0001",
           slice(col("toks"), col("pos").cast("int"), lit(ww))).as("win"))
-    val keeper = withWin.groupBy(col("win"))
-      .agg(min(struct(col("doc_id"), col("pos"))).as("keeper"))
-    val r = withWin.join(keeper, Seq("win"))
-      .filter(col("doc_id") =!= col("keeper.doc_id") ||
-        col("pos") =!= col("keeper.pos"))
-      .select(col("doc_id"), col("n"), col("pos"),
-        (col("pos") + (ww - 1)).as("endp"))
-    substrSpanReport(r)
+    exactSubstrReport(withWin, "win", ww)
   }
 
   /** Oracle CTE chain ending in `l(doc_id, pos, lcp)` — the DuckDB
@@ -1772,23 +1775,7 @@ object DedupQueries {
     QueryDef(
       "q47_substring_dedup",
       sqlExactSubstrOracle) { (s, dir) =>
-      val w = substrWindows(s, dir)
-      // skew-safe duplicate resolution: groupBy on the fingerprint with
-      // map-side partial count/min (a heavy-hitter fingerprint collapses
-      // to one row per map partition before the shuffle), HAVING-filtered
-      // to repeated fingerprints only, then joined back — the join is an
-      // equi-join AQE's skew rule can split, unlike a window partition
-      val dup = w.groupBy(col("wh")).agg(
-        count(lit(1)).as("cnt"),
-        min(struct(col("doc_id"), col("pos"))).as("keeper"))
-        .filter(col("cnt") >= 2)
-        .select(col("wh"), col("keeper"))
-      val r = w.join(dup, Seq("wh"))
-        .filter(col("doc_id") =!= col("keeper.doc_id") ||
-          col("pos") =!= col("keeper.pos"))
-        .select(col("doc_id"), col("n"), col("pos"),
-          (col("pos") + (SubstrW - 1)).as("endp"))
-      substrSpanReport(r)
+      exactSubstrReport(substrWindows(s, dir), "wh", SubstrW)
     },
 
     // X1+++/Q47b — INCREMENTAL ExactSubstr: tonight's batch (q45's
@@ -1846,20 +1833,12 @@ object DedupQueries {
         .filter(graft.functions.SketchFunctions.bloomMightContain(
           sketch, xxhash64(col("wh"))))
         .select(col("wh").as("hwh")).distinct()
-      val bd = bw.groupBy(col("wh")).agg(
-        count(lit(1)).as("cnt"),
-        min(struct(col("doc_id"), col("pos"))).as("keeper"))
-        .filter(col("cnt") >= 2)
-        .select(col("wh").as("bwh"), col("keeper"))
+      val bd = keepers(bw, "wh").withColumnRenamed("wh", "bwh")
       val r = bw
         .join(hw, col("wh") === col("hwh"), "left")
         .join(bd, col("wh") === col("bwh"), "left")
-        .filter(col("hwh").isNotNull ||
-          (col("bwh").isNotNull && (col("doc_id") =!= col("keeper.doc_id") ||
-            col("pos") =!= col("keeper.pos"))))
-        .select(col("doc_id"), col("n"), col("pos"),
-          (col("pos") + (SubstrW - 1)).as("endp"))
-      substrSpanReport(r)
+        .filter(col("hwh").isNotNull || (col("bwh").isNotNull && notKeeper))
+      substrSpanReport(r, SubstrW)
     },
 
     // X2+/Q49 — cross-source corpus-overlap matrix: the union MinHash of a
@@ -2058,26 +2037,13 @@ object DedupQueries {
       import org.apache.spark.sql.expressions.Window
       val (_, r) = suffixRanks(s, dir)
       // the report: first SaTopK array entries (TakeOrderedAndProject —
-      // map-side top-k partials, never a full result sort) + an 8-token
-      // prefix as human-readable evidence. The RAW text joins the
-      // broadcast top-k first and only the ≤ SaTopK surviving rows are
-      // tokenized (round 17) — previously the whole corpus was tokenized
-      // to render a bounded report.
-      val top = r.orderBy(col("r"), col("doc_id"), col("pos")).limit(SaTopK)
-      Tables.documents(s, dir)
-        .join(broadcast(top), Seq("doc_id"))
-        .select(col("doc_id"), col("pos"), col("r"),
-          tokens(col("text")).as("toks"))
-        .select(col("doc_id"), col("pos"), col("r"),
-          concat_ws(" ",
-            (0 until 8).map(j =>
-              try_element_at(col("toks"), (col("pos") + lit(j)).cast("int"))): _*)
-            .as("prefix8"))
-        .withColumn("sa_pos",
-          row_number().over(Window.orderBy(col("r"), col("doc_id"), col("pos")))
-            .cast("long"))
-        .select(col("sa_pos"), col("doc_id"), col("pos"), col("prefix8"))
-        .orderBy("sa_pos")
+      // map-side top-k partials, never a full result sort), numbered in
+      // array order, + the shared 8-token evidence tail
+      val ord = Seq(col("r"), col("doc_id"), col("pos"))
+      val top = r.orderBy(ord: _*).limit(SaTopK)
+        .select(row_number().over(Window.orderBy(ord: _*)).cast("long").as("sa_pos"),
+          col("doc_id"), col("pos"))
+      prefix8Report(s, dir, top)
     },
 
     // X1+++/Q63b — LCP DUPLICATE-MASS SPECTRUM: the consumer the suffix
@@ -2111,18 +2077,9 @@ object DedupQueries {
     QueryDef(
       "q63b_lcp_mining",
       sqlLcpHistogramOracle) { (s, dir) =>
-      // the spectrum is a ≤ SaDepth+1-group aggregate over the stored LCP
-      // array ([[saLcp]] — built once, shared with q63c/q63d); map-side
-      // partials collapse everything before the shuffle
-      val (_, lcpT) = saLcp(s, dir)
-      lcpT
-        .groupBy("lcp")
-        .agg(count(lit(1)).as("n_pairs"),
-          min(struct(col("a_doc").as("doc_id"), col("a_pos").as("pos"))).as("ex"))
-        .select(col("lcp"), col("n_pairs"),
-          col("ex.doc_id").as("example_doc_id"),
-          col("ex.pos").as("example_pos"))
-        .orderBy("lcp")
+      // the spectrum over the stored LCP array ([[saLcp]] — built once,
+      // shared with q63c/q63d)
+      lcpHistogram(saLcp(s, dir)._2)
     },
 
     // X1+++/Q63c — SUFFIX-ARRAY ExactSubstr removal: the paper-faithful
@@ -2234,7 +2191,7 @@ object DedupQueries {
     // incremental family (q22d keys, q47b windows, q64 vocabulary, q65
     // near-dup bands). A nightly batch (the shared doc_id % 7 rule)
     // arrives against a STANDING index — the history SA key table
-    // ([[histSaKeys]]): instead of re-running the 5-round prefix-doubling
+    // ([[histSnapshot]]): instead of re-running the 5-round prefix-doubling
     // over history+batch (~20 corpus-sized shuffles), the nightly job
     //  (a) builds the BATCH's own suffix ranks with the q63 machinery
     //      over batch docs only (5 rounds over batch-sized frames), and
@@ -2291,7 +2248,7 @@ object DedupQueries {
       // BEFORE tokenizing (round 17) — no corpus-wide tokenize, so the
       // round-16 Spread is obsolete here (the filtered work is
       // batch-proportional, not scan-bound)
-      lcpHistogram(updatedLcp(mergedSa(s, dir), histSaLcp(s, dir),
+      lcpHistogram(updatedLcp(mergedSa(s, dir), histSnapshot(s, dir).lcp,
         Tables.documents(s, dir)))
     },
 

@@ -393,7 +393,6 @@ object QualityQueries {
            |   AND top4_frac <= $RepTop4Max AND dup3_frac <= $RepDup3Max) AS keep
            |FROM rf ORDER BY doc_id""".stripMargin
       }) { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
       // four consumers (three gram widths + the position stream) re-run
       // tokenize off this scan; the spread parallelizes it AND lets
       // ReuseExchange share one tokenize across them (guide §2.4/§2.5)
@@ -441,17 +440,9 @@ object QualityQueries {
       // partition size is bounded by document length)
       val rr = rw.join(rdup, Seq("doc_id", "g"))
         .select(col("doc_id"), col("pos"), (col("pos") + 2).as("endp"))
-      val byDoc = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-      val prevEnd = max(col("endp")).over(byDoc.rowsBetween(Window.unboundedPreceding, -1))
-      val rcov = rr
-        .withColumn("brk",
-          when(col("pos") > coalesce(prevEnd, lit(-9)) + 1, 1L).otherwise(0L))
-        .withColumn("gid",
-          sum(col("brk")).over(byDoc.rowsBetween(Window.unboundedPreceding, 0)))
-        .groupBy(col("doc_id"), col("gid"))
-        .agg(min(col("pos")).as("a"), max(col("endp")).as("b"))
+      val rcov = DedupQueries.mergedSpans(rr)
         .groupBy(col("doc_id"))
-        .agg(sum(col("b") - col("a") + 1).as("cov"))
+        .agg(sum(col("sp_end") - col("sp_start") + 1).as("cov"))
       def frac(c: org.apache.spark.sql.Column, mult: Double) =
         round(coalesce(c, lit(0L)) * lit(mult) / col("n"), 6)
       val rf = src.select(col("doc_id"), col("n"))

@@ -146,31 +146,6 @@ object StreamRunner {
       f.toPath, to, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
   }
 
-  /** Remove a staging dir's leftovers (_SUCCESS etc.) and the dir itself —
-    * recursively and best-effort: an aborted/retried task can leave a
-    * non-empty `_temporary` subdir, which a flat delete() skips silently
-    * and a bare deleteIfExists(staging) then turns into a
-    * DirectoryNotEmptyException AFTER the part files are already
-    * committed. Cleanup failure past the renames must not fail the
-    * publish; a survivor is scratch inside a TempDirs-tracked tree. */
-  private def deleteTree(staging: java.nio.file.Path): Unit =
-    try {
-      val walk = java.nio.file.Files.walk(staging)
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(p => { try { java.nio.file.Files.deleteIfExists(p); () }
-          catch {
-            // a blanket Exception catch would swallow an interrupt and
-            // clear the thread's flag — restore it so the caller's
-            // cancellation still lands; everything else stays best-effort
-            case _: InterruptedException => Thread.currentThread().interrupt()
-            case scala.util.control.NonFatal(_) => ()
-          } })
-      finally walk.close()
-    } catch {
-      case _: InterruptedException => Thread.currentThread().interrupt()
-      case scala.util.control.NonFatal(_) => ()
-    }
-
   /** The one slice commit every publisher here goes through: `tagged`
     * carries each row's slice index in `__slice` (0 until `slices`), and
     * `dir` receives exactly `slices` file commits, one per slice in slice
@@ -233,7 +208,11 @@ object StreamRunner {
         moveStamped(src, java.nio.file.Paths.get(dir, f"part-$j%05d-$publish.parquet"),
           stamper.next())
       }
-    } finally deleteTree(staging)
+    } finally {
+      // cleanup failure past the renames must not fail the publish; a
+      // survivor is scratch inside a TempDirs-tracked tree
+      graft.TempDirs.delete(staging.toString)
+    }
   }
 
   /** Slice index of `ts` for ascending `boundaries`: the number of

@@ -34,6 +34,20 @@ class CaseMappingSpec extends SparkSpec {
     assert(seen.asScala.toSeq.nonEmpty && seen.asScala.forall(_ == "false"), seen)
   }
 
+  test("a JVM whose default locale changes case mapping is refused") {
+    val prev = Locale.getDefault
+    try {
+      Locale.setDefault(Locale.forLanguageTag("tr"))
+      val e = intercept[IllegalStateException](GraftSession.builder("local[1]"))
+      assert(e.getMessage.contains("tr") && e.getMessage.contains("-Duser.language"),
+        e.getMessage)
+      for (ok <- Seq(Locale.US, Locale.ROOT)) {
+        Locale.setDefault(ok)
+        GraftSession.builder("local[1]")
+      }
+    } finally Locale.setDefault(prev)
+  }
+
   /** Every Unicode scalar value (surrogates excluded) whose Spark
     * `lower` or `upper` differs from `String`'s root-locale mapping, as
     * (code point, Spark lower, String lower, Spark upper, String upper),

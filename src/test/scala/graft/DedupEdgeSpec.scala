@@ -1006,7 +1006,15 @@ class DedupEdgeSpec extends SparkSpec {
         (7L, s"$run10 pp"),
         (14L, "x y"),
         (2L, s"$run10 pp"),
-        (9L, "p q r s")))
+        (9L, "p q r s")),
+      // third fixture, every night degenerate: a single-document base,
+      // an all-duplicate night 0, an empty night 1 and a one-document
+      // night 2 that is a proper suffix of every other doc
+      Seq(
+        (3L, s"$run10 pp"),
+        (7L, s"$run10 pp"),
+        (14L, s"$run10 pp"),
+        (2L, "pp")))
     for (rows <- fixtures) {
       val d = TempDirs.create("graft_q63i_")
       rows.map { case (id, t) => (id, t, "en", "src0", t.length.toLong) }

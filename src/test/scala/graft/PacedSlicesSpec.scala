@@ -111,4 +111,15 @@ class PacedSlicesSpec extends SparkSpec {
         s"left behind: ${new File(dir).list().mkString(",")}")
     }
   }
+
+  test("TempDirs.delete removes a tree holding a non-empty nested _temporary dir") {
+    val dir = TempDirs.create("graft_delete_tree_")
+    val tmp = new File(dir, ".staging_x/_temporary/0/task_0")
+    assert(tmp.mkdirs())
+    java.nio.file.Files.writeString(new File(tmp, "part-0.parquet").toPath, "x")
+    java.nio.file.Files.writeString(new File(dir, ".staging_x/_SUCCESS").toPath, "")
+    TempDirs.delete(dir)
+    assert(!new File(dir).exists())
+    TempDirs.delete(dir) // a missing path returns quietly
+  }
 }

@@ -298,8 +298,12 @@ class PlanSpec extends SparkSpec {
   private def withConfs[T](pairs: (String, String)*)(f: => T): T =
     graft.Confs.withConfs(spark, pairs: _*)(f)
 
-  /** The final (post-AQE) physical plan of an EXECUTED frame. */
-  private def finalPlan(df: org.apache.spark.sql.DataFrame)
+  /** The physical plan under AQE's wrapper (AdaptiveSparkPlanExec exposes
+    * no children to tree traversal): the final plan of an EXECUTED frame;
+    * before any stage runs, the prepared plan — EnsureRequirements
+    * applied, so an aggregate's or a join's own shuffle is in it (the plan
+    * `Spread.hasShuffle` reads). */
+  private def adaptivePlan(df: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.execution.SparkPlan =
     df.queryExecution.executedPlan match {
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
@@ -321,7 +325,7 @@ class PlanSpec extends SparkSpec {
   test("q41b: the day filter arrives ONLY via a dynamic-pruning subquery at runtime") {
     val df = graft.queries.ScaleQueries.dppJoinFrame(spark, sf).groupBy("d").count()
     df.collect()
-    val scan = collectScans(finalPlan(df)).headOption
+    val scan = collectScans(adaptivePlan(df)).headOption
       .getOrElse(fail("expected a FileSourceScanExec over the partitioned layout"))
     // the dim's attribute filter is NOT expressible on the partition column,
     // so the scan's only pruning predicate must be the DPP subquery
@@ -356,7 +360,7 @@ class PlanSpec extends SparkSpec {
       val df = graft.queries.ScaleQueries.bloomJoinFrame(spark, sf)
         .groupBy("o_orderpriority").count()
       df.collect()
-      val p = finalPlan(df).toString
+      val p = adaptivePlan(df).toString
       assert(p.contains("SortMergeJoin"), p)
       assert(p.contains("bloom_filter_agg"),
         "expected an injected Bloom build over the filtered orders keys")
@@ -389,7 +393,7 @@ class PlanSpec extends SparkSpec {
         .withColumn("tag", org.apache.spark.sql.functions.length(col("k")))
       val joined = left.join(right, "k").groupBy("tag").count()
       joined.collect()
-      val p = finalPlan(joined).toString
+      val p = adaptivePlan(joined).toString
       assert(p.contains("skew=true"),
         s"expected OptimizeSkewedJoin to mark the SMJ skew=true:\n${p.take(3000)}")
     }
@@ -510,16 +514,8 @@ class PlanSpec extends SparkSpec {
     // would otherwise each re-scan raw); quality/split/packing read only
     // the materialized curated table.
     import org.apache.spark.sql.execution.FileSourceScanExec
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    def allScans(df: org.apache.spark.sql.DataFrame): Seq[FileSourceScanExec] = {
-      // AQE wraps exchange-bearing plans in AdaptiveSparkPlanExec, which
-      // exposes no children to TreeNode traversal — unwrap to its input
-      val p = df.queryExecution.executedPlan match {
-        case a: AdaptiveSparkPlanExec => a.inputPlan
-        case p => p
-      }
-      p.collect { case f: FileSourceScanExec => f }
-    }
+    def allScans(df: org.apache.spark.sql.DataFrame): Seq[FileSourceScanExec] =
+      adaptivePlan(df).collect { case f: FileSourceScanExec => f }
     def rawScans(df: org.apache.spark.sql.DataFrame): Int =
       allScans(df).count(
         _.relation.location.rootPaths.exists(_.toString.contains("documents.parquet")))
@@ -707,15 +703,11 @@ class PlanSpec extends SparkSpec {
 
   test("sigtok build: one documents scan, a narrow kernel projection, only the spread exchange") {
     import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
     import graft.queries.{DedupQueries, Materialize}
     val build = Materialize.spread(spark, sf, col("doc_id"))(DedupQueries.sigTokFrame(spark, sf))
-    val p = build.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.inputPlan
-      case p => p
-    }
+    val p = adaptivePlan(build)
     val scans = p.collect { case f: FileSourceScanExec => f }
     assert(scans.size === 1 &&
       scans.head.relation.location.rootPaths.forall(_.toString.contains("documents.parquet")), p)
@@ -729,31 +721,23 @@ class PlanSpec extends SparkSpec {
   }
 
   test("Spread: a one-file scan broadcast-joined to a tiny frame is still spread") {
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
     import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
     import org.apache.spark.sql.functions.broadcast
     import spark.implicits._
     val tiny = Seq(0L, 1L, 2L).toDF("n_regionkey")
     val joined = Tables.nation(spark, sf).join(broadcast(tiny), Seq("n_regionkey"))
-    val p = graft.queries.Spread(joined, col("n_nationkey")).queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.inputPlan
-      case p => p
-    }
+    val p = adaptivePlan(graft.queries.Spread(joined, col("n_nationkey")))
     assert(p.collect { case j: BroadcastHashJoinExec => j }.size === 1, p)
     assert(p.collect { case e: ShuffleExchangeExec => e.shuffleOrigin } === Seq(REPARTITION_BY_NUM), p)
   }
 
   test("Spread: a one-file scan aggregated by key gets no extra repartition") {
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS, ShuffleExchangeExec}
     val agg = Tables.nation(spark, sf).groupBy("n_regionkey").agg(count(lit(1)).as("n"))
     // spread key other than the aggregate's, so that EnsureRequirements
     // could not drop a spread as a repartition its child already has
-    val p = graft.queries.Spread(agg, col("n")).queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan // prepared: EnsureRequirements applied
-      case p => p
-    }
+    val p = adaptivePlan(graft.queries.Spread(agg, col("n")))
     assert(p.collect { case e: ShuffleExchangeExec => e.shuffleOrigin } === Seq(ENSURE_REQUIREMENTS), p)
   }
 
