@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.sources.LocalFiles
+
 /** Session factory for the engine.
   *
   * Scale stance (designed for a multi-executor cluster, tested on local[N]):
@@ -77,6 +79,20 @@ object GraftSession {
       // DuckDB where the JVM does not (tools/case_sweep.py, BASELINE.md
       // "Case mapping on the JVM"; CaseMappingSpec).
       .config("spark.sql.icu.caseMappings.enabled", "false")
+      // file: through graft.sources.LocalFiles, Hadoop's local filesystem
+      // with its two forking calls on java.nio. Hadoop runs without
+      // libhadoop here, so stock RawLocalFileSystem forks `chmod` after
+      // every create and mkdirs and `readlink` twice per FileContext
+      // rename, each with a process reaper and a stderr reader thread:
+      // 5,110 process starts in one clickstream_ingest run (the offset,
+      // commit, state-delta and sink logs of every micro-batch), 41 with
+      // this binding (Spark's own `rm -rf` of each collected session's
+      // artifact dir, and two start-up probes). The checksum layers (.crc
+      // written and verified), Spark's checkpoint manager and its atomic
+      // rename, and every other scheme are stock (LocalFilesSpec;
+      // BASELINE.md "Local files without forks").
+      .config("spark.hadoop.fs.file.impl", classOf[LocalFiles.Checksummed].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[LocalFiles.Context].getName)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.streaming.sessionWindow.merge.sessions.in.local.partition", "true")
       // events.parquet stores ts as TIMESTAMP(NANOS); Spark has no nanos

@@ -2,11 +2,13 @@ package graft.tools
 
 import java.io.File
 import java.nio.file.{Files, Paths}
+import java.time.Instant
 import java.util.concurrent.ConcurrentLinkedQueue
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import scala.jdk.CollectionConverters._
 
+import jdk.jfr.consumer.RecordingStream
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
@@ -26,7 +28,8 @@ import graft.queries.{DedupQueries, SimilarityQueries}
   * Bench's row by column name, `jobs` ([id, ms, description, SQL execution
   * id or null]), `batches` (per micro-batch: stream name, `durationMs`,
   * input rows, state operators), `outside_s` (wall outside every
-  * `triggerExecution`), `state_dir_b` (bytes of the
+  * `triggerExecution`), `forks` (processes the JVM started: JFR
+  * `jdk.ProcessStart` events), `state_dir_b` (bytes of the
   * newest scratch state dirs, q45b/q45c; -1 if none). `planDir` gets each
   * target's plans as `<short>.txt`. */
 object Profile {
@@ -74,6 +77,30 @@ object Profile {
     }
   }
 
+  /** The JVM's `jdk.ProcessStart` events, on a JFR stream that records
+    * nothing else. Events arrive with the stream's periodic flush (about
+    * once a second), so a window is counted once two flushes have passed
+    * since it closed: the second flush's chunk starts after the window. */
+  private[graft] final class Forks extends AutoCloseable {
+    private val starts = new ConcurrentLinkedQueue[Instant]()
+    private val flushes = new AtomicLong
+    private val stream = new RecordingStream()
+    stream.enable("jdk.ProcessStart")
+    stream.onEvent("jdk.ProcessStart", e => { starts.add(e.getStartTime); () })
+    stream.onFlush(() => { flushes.incrementAndGet(); () })
+    stream.startAsync()
+
+    /** Processes started in [from, to]; forgets every event up to `to`. */
+    def within(from: Instant, to: Instant): Int = {
+      val (seen, deadline) = (flushes.get, System.nanoTime() + 5_000_000_000L)
+      while (flushes.get < seen + 2 && System.nanoTime() < deadline) Thread.sleep(10)
+      val n = starts.asScala.count(t => !t.isBefore(from) && !t.isAfter(to))
+      starts.removeIf(t => !t.isAfter(to))
+      n
+    }
+    def close(): Unit = stream.close()
+  }
+
   private def str(s: String): String = Option(s).getOrElse("").flatMap { case '"' => "\\\""
     case '\\' => "\\\\"; case c if c < ' ' => " "; case c => c.toString }.mkString("\"", "", "\"")
 
@@ -88,7 +115,7 @@ object Profile {
   }
 
   private def line(t: Target, pass: Int, buildMs: Long, m: Bench.Measurement,
-                   ps: Seq[StreamingQueryProgress]): String = {
+                   ps: Seq[StreamingQueryProgress], forks: Int): String = {
     def obj(kv: Seq[(String, Any)]) = kv.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
     val batches = ps.map(p => obj(Seq("query" -> str(p.name), "batch" -> p.batchId,
       "rows" -> p.numInputRows, "ms" -> obj(p.durationMs.asScala.toSeq.sortBy(_._1)),
@@ -100,30 +127,32 @@ object Profile {
         "jobs" -> m.jobs.map(j => s"[${j.id},${j.ms},${str(j.desc)},${j.execId.getOrElse("null")}]")
           .mkString("[", ",", "]"),
         "batches" -> batches.mkString("[", ",", "]"), "outside_s" -> (m.row(0) - trigger) / 1000.0,
-        "state_dir_b" -> stateDirBytes(t.short)))
+        "forks" -> forks, "state_dir_b" -> stateDirBytes(t.short)))
   }
 
   /** Profile each target `passes` times on `spark`, handing each JSON line
     * to `emit`. Every target and `passes` are checked before any job runs;
-    * both listeners are removed again afterwards. */
+    * both listeners and the fork stream are removed again afterwards. */
   def run(spark: SparkSession, dir: String, targets: Seq[String], passes: Int,
           planDir: Option[String] = None, emit: String => Unit = println(_)): Unit = {
     require(passes >= 1, s"passes must be at least 1, got $passes")
     val resolved = targets.map(resolve)
-    val (tasks, batches) = (new TaskMetricsListener, new Batches)
+    val (tasks, batches, forks) = (new TaskMetricsListener, new Batches, new Forks)
     spark.sparkContext.addSparkListener(tasks)
     spark.streams.addListener(batches)
     try {
       for (t <- resolved; pass <- 1 to passes) {
         batches.take()
         var buildMs = 0L
+        val from = Instant.now()
         val m = Bench.measure(tasks) {
           val t0 = System.nanoTime()
           val frames = t.frames(spark, dir)
           buildMs = (System.nanoTime() - t0) / 1000000L
           frames.foreach(_.write.format("noop").mode("overwrite").save())
         }
-        emit(line(t, pass, buildMs, m, batches.take()))
+        val to = Instant.now()
+        emit(line(t, pass, buildMs, m, batches.take(), forks.within(from, to)))
       }
       for (pd <- planDir; t <- resolved) {
         val text = if (SparkEntry.queries.contains(t.name)) Explain.planText(spark, t.name, dir)
@@ -132,6 +161,7 @@ object Profile {
         Files.writeString(Paths.get(pd, s"${t.short}.txt"), s"-- ${t.name} @ $dir --\n$text")
       }
     } finally {
+      forks.close()
       spark.streams.removeListener(batches)
       spark.sparkContext.removeSparkListener(tasks)
     }

@@ -1,5 +1,7 @@
 package graft
 
+import java.time.Instant
+
 import scala.collection.mutable.ArrayBuffer
 
 import graft.tools.Profile
@@ -7,8 +9,8 @@ import org.apache.spark.sql.SparkSession
 
 /** The profiler's contract: one JSON line per (target, pass) carrying
   * Bench's row, the jobs and (for streaming queries) the micro-batch
-  * breakdown; bad arguments fail before any job runs; the session's
-  * listeners are left as they were. */
+  * breakdown and the processes the JVM started; bad arguments fail before
+  * any job runs; the session's listeners are left as they were. */
 class ProfileSpec extends SparkSpec {
 
   private def profile(targets: Seq[String], passes: Int,
@@ -34,6 +36,9 @@ class ProfileSpec extends SparkSpec {
       assert(long(l, "task_cpu_ms") > 0, l)
       assert(l.contains(""""jobs":[["""), l)
       assert(long(l, "input_b") > 0, l)
+      // every fork in the JVM counts, Spark's own asynchronous ones too
+      // (a collected session's artifact-dir `rm -rf`), so only its presence
+      assert(long(l, "forks") >= 0L, l)
     }
     assert(lines.map(long(_, "pass")) === Seq(1L, 2L, 1L, 2L))
     q20.foreach { l =>
@@ -42,6 +47,24 @@ class ProfileSpec extends SparkSpec {
       val names = """"query":"([^"]*)"""".r.findAllMatchIn(batches).map(_.group(1)).toSeq
       assert(names.nonEmpty && names.forall(_.startsWith("q20")), names)
     }
+  }
+
+  test("forks counts the processes started inside its window, and only those") {
+    val forks = new Profile.Forks
+    try {
+      def fork(n: Int): Unit = (1 to n).foreach { _ =>
+        new ProcessBuilder("true").start().waitFor(); Thread.sleep(10)
+      }
+      fork(5)
+      val from = Instant.now()
+      fork(10)
+      val to = Instant.now()
+      fork(5)
+      // Spark may fork on its own meanwhile (a collected session's
+      // artifact-dir `rm -rf`): at most a couple more
+      assert((10 to 12).contains(forks.within(from, to)))
+      assert((5 to 7).contains(forks.within(to, Instant.now()))) // the next window's
+    } finally forks.close()
   }
 
   test("every q10 job, AQE stage jobs included, carries its SQL execution id") {

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.sources.Tables
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
@@ -25,11 +23,9 @@ class SourcesSpec extends SparkSpec {
   private val micros = 1583066096789000L // wall, UTC, micros since epoch
 
   private def stage(writer: String => Unit): String = {
-    val dir = Files.createTempDirectory("graft_sources_spec").toFile
-    dir.deleteOnExit()
-    val sub = new java.io.File(dir, "events.parquet")
-    writer(sub.getAbsolutePath)
-    dir.getAbsolutePath
+    val dir = TempDirs.create("graft_sources_spec")
+    writer(new java.io.File(dir, "events.parquet").getAbsolutePath)
+    dir
   }
 
   test("events: long-nanos encoding normalizes to TIMESTAMP at the UTC wall time") {
