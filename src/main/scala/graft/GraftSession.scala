@@ -79,6 +79,29 @@ object GraftSession {
       // DuckDB where the JVM does not (tools/case_sweep.py, BASELINE.md
       // "Case mapping on the JVM"; CaseMappingSpec).
       .config("spark.sql.icu.caseMappings.enabled", "false")
+      // Two per-stage buffers sized for the data, not for a cluster
+      // executor. TorrentBroadcast allocates one whole block (4 MiB by
+      // default) for every broadcast, even a 5 KB one, and every stage's
+      // task binary, every parquet scan's Hadoop conf and every broadcast
+      // join is broadcast. Tungsten's page defaults to executor memory /
+      // cores / 16 (32 MiB on a 2 GiB heap), and every hash aggregate,
+      // fast hash map and sort task takes one page on its first insert.
+      // On G1 each of those is a humongous allocation (at least half a
+      // region; regions are 1 MiB at heaps below 4 GiB), and that churn,
+      // not retained data, set peak RSS. 256 KiB is under half of G1's
+      // smallest region, so a broadcast chunk is never humongous; a large
+      // broadcast gets more pieces. 1 MiB is Spark's own page floor; a
+      // record larger than a page still gets a page of its size, and the
+      // 8,192-entry page table caps one task at 8 GiB. No query's plan,
+      // output or spill changes. Measured on perfbench's curation_night
+      // (2 GiB heap, local[2], one run): allocations of at least 512 KiB
+      // fell 3,696 -> 663 MB (JFR jdk.ObjectAllocationOutsideTLAB), and
+      // humongous regions before a young GC from a mean of 409 to 109;
+      // median peak RSS over 10 runs fell 1,853 -> 1,281 MB
+      // (BufferSizingSpec; BASELINE.md "Cluster-sized buffers off the
+      // humongous path").
+      .config("spark.broadcast.blockSize", "256k")
+      .config("spark.buffer.pageSize", "1m")
       // file: through graft.sources.LocalFiles, Hadoop's local filesystem
       // with its two forking calls on java.nio. Hadoop runs without
       // libhadoop here, so stock RawLocalFileSystem forks `chmod` after

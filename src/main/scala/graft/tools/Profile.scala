@@ -29,7 +29,9 @@ import graft.queries.{DedupQueries, SimilarityQueries}
   * id or null]), `batches` (per micro-batch: stream name, `durationMs`,
   * input rows, state operators), `outside_s` (wall outside every
   * `triggerExecution`), `forks` (processes the JVM started: JFR
-  * `jdk.ProcessStart` events), `state_dir_b` (bytes of the
+  * `jdk.ProcessStart` events), `large_alloc_mb` (MiB allocated in objects
+  * of at least 512 KiB, G1's humongous size at a 1 MiB region: JFR
+  * `jdk.ObjectAllocationOutsideTLAB`), `state_dir_b` (bytes of the
   * newest scratch state dirs, q45b/q45c; -1 if none). `planDir` gets each
   * target's plans as `<short>.txt`. */
 object Profile {
@@ -77,28 +79,49 @@ object Profile {
     }
   }
 
-  /** The JVM's `jdk.ProcessStart` events, on a JFR stream that records
-    * nothing else. Events arrive with the stream's periodic flush (about
-    * once a second), so a window is counted once two flushes have passed
-    * since it closed: the second flush's chunk starts after the window. */
-  private[graft] final class Forks extends AutoCloseable {
+  /** What the JVM did in a window, on one JFR stream that records nothing
+    * else: processes started (`jdk.ProcessStart`) and allocations of at
+    * least [[JvmEvents.LargeAllocB]] (`jdk.ObjectAllocationOutsideTLAB`,
+    * without stack traces; smaller ones are dropped on arrival). Events
+    * arrive with the stream's periodic flush (about once a second), so a
+    * window is counted once two flushes have passed since it closed: the
+    * second flush's chunk starts after the window. */
+  private[graft] final class JvmEvents extends AutoCloseable {
     private val starts = new ConcurrentLinkedQueue[Instant]()
+    private val large = new ConcurrentLinkedQueue[(Instant, Long)]()
     private val flushes = new AtomicLong
     private val stream = new RecordingStream()
     stream.enable("jdk.ProcessStart")
+    stream.enable("jdk.ObjectAllocationOutsideTLAB").withoutStackTrace()
     stream.onEvent("jdk.ProcessStart", e => { starts.add(e.getStartTime); () })
+    stream.onEvent("jdk.ObjectAllocationOutsideTLAB", { e =>
+      val b = e.getLong("allocationSize")
+      if (b >= JvmEvents.LargeAllocB) large.add((e.getStartTime, b))
+      ()
+    })
     stream.onFlush(() => { flushes.incrementAndGet(); () })
     stream.startAsync()
 
-    /** Processes started in [from, to]; forgets every event up to `to`. */
-    def within(from: Instant, to: Instant): Int = {
+    /** Processes started and large-allocation bytes in [from, to];
+      * forgets every event up to `to`. */
+    def within(from: Instant, to: Instant): JvmEvents.Window = {
       val (seen, deadline) = (flushes.get, System.nanoTime() + 5_000_000_000L)
       while (flushes.get < seen + 2 && System.nanoTime() < deadline) Thread.sleep(10)
-      val n = starts.asScala.count(t => !t.isBefore(from) && !t.isAfter(to))
+      def in(t: Instant) = !t.isBefore(from) && !t.isAfter(to)
+      val w = JvmEvents.Window(starts.asScala.count(in),
+        large.asScala.collect { case (t, b) if in(t) => b }.sum)
       starts.removeIf(t => !t.isAfter(to))
-      n
+      large.removeIf(a => !a._1.isAfter(to))
+      w
     }
     def close(): Unit = stream.close()
+  }
+
+  private[graft] object JvmEvents {
+    /** Half of G1's smallest region: an object this large is humongous at
+      * every heap size. */
+    val LargeAllocB: Long = 512L << 10
+    final case class Window(forks: Int, largeAllocB: Long)
   }
 
   private def str(s: String): String = Option(s).getOrElse("").flatMap { case '"' => "\\\""
@@ -115,7 +138,7 @@ object Profile {
   }
 
   private def line(t: Target, pass: Int, buildMs: Long, m: Bench.Measurement,
-                   ps: Seq[StreamingQueryProgress], forks: Int): String = {
+                   ps: Seq[StreamingQueryProgress], jvm: JvmEvents.Window): String = {
     def obj(kv: Seq[(String, Any)]) = kv.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
     val batches = ps.map(p => obj(Seq("query" -> str(p.name), "batch" -> p.batchId,
       "rows" -> p.numInputRows, "ms" -> obj(p.durationMs.asScala.toSeq.sortBy(_._1)),
@@ -127,17 +150,18 @@ object Profile {
         "jobs" -> m.jobs.map(j => s"[${j.id},${j.ms},${str(j.desc)},${j.execId.getOrElse("null")}]")
           .mkString("[", ",", "]"),
         "batches" -> batches.mkString("[", ",", "]"), "outside_s" -> (m.row(0) - trigger) / 1000.0,
-        "forks" -> forks, "state_dir_b" -> stateDirBytes(t.short)))
+        "forks" -> jvm.forks, "large_alloc_mb" -> math.round(jvm.largeAllocB / 104857.6) / 10.0,
+        "state_dir_b" -> stateDirBytes(t.short)))
   }
 
   /** Profile each target `passes` times on `spark`, handing each JSON line
     * to `emit`. Every target and `passes` are checked before any job runs;
-    * both listeners and the fork stream are removed again afterwards. */
+    * both listeners and the JFR stream are removed again afterwards. */
   def run(spark: SparkSession, dir: String, targets: Seq[String], passes: Int,
           planDir: Option[String] = None, emit: String => Unit = println(_)): Unit = {
     require(passes >= 1, s"passes must be at least 1, got $passes")
     val resolved = targets.map(resolve)
-    val (tasks, batches, forks) = (new TaskMetricsListener, new Batches, new Forks)
+    val (tasks, batches, jvm) = (new TaskMetricsListener, new Batches, new JvmEvents)
     spark.sparkContext.addSparkListener(tasks)
     spark.streams.addListener(batches)
     try {
@@ -152,7 +176,7 @@ object Profile {
           frames.foreach(_.write.format("noop").mode("overwrite").save())
         }
         val to = Instant.now()
-        emit(line(t, pass, buildMs, m, batches.take(), forks.within(from, to)))
+        emit(line(t, pass, buildMs, m, batches.take(), jvm.within(from, to)))
       }
       for (pd <- planDir; t <- resolved) {
         val text = if (SparkEntry.queries.contains(t.name)) Explain.planText(spark, t.name, dir)
@@ -161,7 +185,7 @@ object Profile {
         Files.writeString(Paths.get(pd, s"${t.short}.txt"), s"-- ${t.name} @ $dir --\n$text")
       }
     } finally {
-      forks.close()
+      jvm.close()
       spark.streams.removeListener(batches)
       spark.sparkContext.removeSparkListener(tasks)
     }

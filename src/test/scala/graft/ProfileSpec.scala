@@ -23,6 +23,9 @@ class ProfileSpec extends SparkSpec {
   private def long(line: String, field: String): Long =
     s""""$field":(-?[0-9]+)""".r.findFirstMatchIn(line).map(_.group(1).toLong)
       .getOrElse(fail(s"no $field in $line"))
+  private def double(line: String, field: String): Double =
+    s""""$field":(-?[0-9]+\\.[0-9]+)""".r.findFirstMatchIn(line).map(_.group(1).toDouble)
+      .getOrElse(fail(s"no $field in $line"))
 
   test("q03 and q20 give one line per pass with task CPU, jobs and q20's batches") {
     val listenersBefore = spark.streams.listListeners().toSeq
@@ -39,6 +42,7 @@ class ProfileSpec extends SparkSpec {
       // every fork in the JVM counts, Spark's own asynchronous ones too
       // (a collected session's artifact-dir `rm -rf`), so only its presence
       assert(long(l, "forks") >= 0L, l)
+      assert(double(l, "large_alloc_mb") >= 0.0, l)
     }
     assert(lines.map(long(_, "pass")) === Seq(1L, 2L, 1L, 2L))
     q20.foreach { l =>
@@ -50,7 +54,7 @@ class ProfileSpec extends SparkSpec {
   }
 
   test("forks counts the processes started inside its window, and only those") {
-    val forks = new Profile.Forks
+    val jvm = new Profile.JvmEvents
     try {
       def fork(n: Int): Unit = (1 to n).foreach { _ =>
         new ProcessBuilder("true").start().waitFor(); Thread.sleep(10)
@@ -62,9 +66,25 @@ class ProfileSpec extends SparkSpec {
       fork(5)
       // Spark may fork on its own meanwhile (a collected session's
       // artifact-dir `rm -rf`): at most a couple more
-      assert((10 to 12).contains(forks.within(from, to)))
-      assert((5 to 7).contains(forks.within(to, Instant.now()))) // the next window's
-    } finally forks.close()
+      assert((10 to 12).contains(jvm.within(from, to).forks))
+      assert((5 to 7).contains(jvm.within(to, Instant.now()).forks)) // the next window's
+    } finally jvm.close()
+  }
+
+  test("large_alloc_mb counts an allocation of at least 512 KiB in its window, and only there") {
+    val jvm = new Profile.JvmEvents
+    try {
+      val from = Instant.now()
+      val big = new Array[Byte](4 << 20)
+      big(big.length - 1) = 1
+      val to = Instant.now()
+      assert(big.sum === 1)
+      val within = jvm.within(from, to).largeAllocB
+      assert(within >= (4L << 20), within)
+      // Spark's own threads may allocate meanwhile, but not this array again
+      val next = jvm.within(to, Instant.now()).largeAllocB
+      assert(next < (4L << 20), next)
+    } finally jvm.close()
   }
 
   test("every q10 job, AQE stage jobs included, carries its SQL execution id") {
